@@ -5526,6 +5526,10 @@ _SQL_TEMPLATES = {
     # re-translation, keeping translate() idempotent)
     "year_of_week": "extract(YEAROFWEEK FROM {0})",
     "yow": "extract(YEAROFWEEK FROM {0})",
+    # DateTimeFunctions.dayOfWeek is ISO, 1 = Monday .. 7 = Sunday (as the
+    # registry's day_of_week); Spark's dayofweek counts from Sunday
+    "day_of_week": "CAST(weekday({0}) + 1 AS BIGINT)",
+    "dow": "CAST(weekday({0}) + 1 AS BIGINT)",
     "bitwise_and": "(({0}) & ({1}))",
     "bitwise_or": "(({0}) | ({1}))",
     "bitwise_xor": "(({0}) ^ ({1}))",

@@ -24,15 +24,27 @@ polygons behave like any other column at 100 TB (no UDF, no R-tree
 build on the driver).  Boolean set operations (ST_Union family) live in
 the pandas-UDF tier: functions/geo_setops.py.
 
-Limits (documented, not silently wrong): MULTIPOLYGON WKT round-trips
-each ring as its own part (holes inside multipolygon parts measure
-correctly via parity but serialize as separate parts).  Round 10
-closed both remaining round-9 slivers: ST_Relate answers T/F/* DE-9IM
-patterns natively AND dimension-digit (0/1/2) patterns EXACTLY for ALL
-areal inputs — simple, holed, and MULTIPOLYGON ring sets
-(geo_setops.relate_exact — interior areas via the even-odd
-inclusion-exclusion over pairwise Greiner–Hormann clips, boundary
-dimensions via ring-set split-at-intersections midpoint
+Every function has one implementation.  Most are Column-API
+expressions.  ST_Area, ST_Centroid, ST_Intersects, ST_Crosses,
+ST_Overlaps, ST_Touches and the T/F/* form of ST_Relate are SQL text
+templates (the ``_S_*`` block below), registered per session as
+temporary SQL functions ``__geo_<name>`` and called from the Column
+builders.  Two limits follow from that:
+  - their operands cannot be lambda variables of a higher-order
+    function (Spark SQL functions reject them with MISSING_ATTRIBUTES);
+    inside a lambda, use the ``_S_*`` text directly;
+  - a Column built by them resolves only in the session that was
+    active when it was built, because that is where the function is
+    registered.
+
+Other limits (documented, not silently wrong): MULTIPOLYGON WKT
+round-trips each ring as its own part (holes inside multipolygon parts
+measure correctly via parity but serialize as separate parts).
+ST_Relate answers T/F/* DE-9IM patterns natively AND dimension-digit
+(0/1/2) patterns EXACTLY for ALL areal inputs — simple, holed, and
+MULTIPOLYGON ring sets (geo_setops.relate_exact — interior areas via
+the even-odd inclusion-exclusion over pairwise Greiner–Hormann clips,
+boundary dimensions via ring-set split-at-intersections midpoint
 classification) — and for LINE and POINT kinds in every combination
 (OGC boundary conventions: point boundary empty, line boundary =
 endpoints, mod-2; 14 canonical matrices pinned in
@@ -49,7 +61,9 @@ and the remaining line/point-digit refusal.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import functools
+
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from prestodb_presto_spark.functions import register
@@ -206,6 +220,11 @@ def st_geom_from_text(wkt) -> Column:
     return _geom(kind, pts, F.when(poly, rings).otherwise(F.array(F.flatten(rings))))
 
 
+_GEOM_DDL = (
+    "struct<kind:string,pts:array<struct<x:double,y:double>>,"
+    "rings:array<array<struct<x:double,y:double>>>>"
+)
+
 _SEGS_DDL = (
     "array<struct<a:struct<x:double,y:double>,b:struct<x:double,y:double>>>"
 )
@@ -235,22 +254,6 @@ def _seglen(s: Column) -> Column:
     dx = s.getField("b").getField("x") - s.getField("a").getField("x")
     dy = s.getField("b").getField("y") - s.getField("a").getField("y")
     return F.sqrt(dx * dx + dy * dy)
-
-
-def _ring_shoelace2(pts: Column) -> Column:
-    """Twice the signed ring area: Σ (x_i·y_j − x_j·y_i)."""
-    return F.aggregate(
-        _pts_segs(pts),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + s.getField("a").getField("x") * s.getField("b").getField("y")
-        - s.getField("b").getField("x") * s.getField("a").getField("y"),
-    )
-
-
-def _shoelace2(g: Column) -> Column:
-    """Twice the signed area of the primary ring."""
-    return _ring_shoelace2(g.getField("pts"))
 
 
 def _ring_crossings(pts: Column, px: Column, py: Column) -> Column:
@@ -284,29 +287,6 @@ def _all_crossings(g: Column, px: Column, py: Column) -> Column:
         F.lit(0),
         lambda acc, ring: acc + _ring_crossings(ring, px, py),
     )
-
-
-def _ring_parity_sign(rings: Column, ring: Column) -> Column:
-    """+1 for rings at even nesting depth (outer boundaries), −1 at odd
-    depth (holes): depth = how many OTHER rings contain this ring's
-    first vertex.  Valid geometries never duplicate a ring, so the
-    value-inequality filter drops exactly the ring itself."""
-    depth = F.size(
-        F.filter(
-            rings,
-            lambda other: (other != ring)
-            & (
-                _ring_crossings(
-                    other,
-                    F.element_at(ring, 1).getField("x"),
-                    F.element_at(ring, 1).getField("y"),
-                )
-                % 2
-                == 1
-            ),
-        )
-    )
-    return F.lit(1) - 2 * (depth % 2)
 
 
 @register("st_geometry_type")
@@ -355,6 +335,10 @@ def _S_ring_shoelace2(pts: str) -> str:
 
 
 def _S_ring_parity_sign(rings: str, ring: str) -> str:
+    """+1 for rings at even nesting depth (outer boundaries), −1 at odd
+    depth (holes): depth = how many OTHER rings contain this ring's
+    first vertex.  Valid geometries never duplicate a ring, so the
+    value-inequality filter drops exactly the ring itself."""
     crossings = _S_ring_crossings(
         "_pr", f"element_at({ring}, 1).x", f"element_at({ring}, 1).y"
     )
@@ -383,19 +367,7 @@ def st_area(g) -> Column:
     (how many OTHER rings contain its first vertex).  One formula covers
     single rings (depth 0), polygon holes (depth 1 → subtract) and
     multipolygon parts (each depth 0); 0 for lower-dim geometries."""
-    gn = _S_name(g)
-    if gn:  # r14: one-parse SQL template (guide §7.3 — see the _S_* block)
-        return F.expr(_S_area(gn))
-    gg = c(g)
-    rings = gg.getField("rings")
-
-    def signed(ring):
-        return _ring_parity_sign(rings, ring) * F.abs(_ring_shoelace2(ring)) / 2
-
-    return F.when(
-        gg.getField("kind").isin("polygon", "multipolygon"),
-        F.aggregate(rings, F.lit(0.0), lambda acc, ring: acc + signed(ring)),
-    ).otherwise(F.lit(0.0))
+    return _geo_fn("area", "DOUBLE", _S_area, g)
 
 
 @register("st_length")
@@ -510,122 +482,61 @@ def st_coord_dim(g) -> Column:
     return F.lit(2).cast("int")
 
 
+def _S_centroid(g: str) -> str:
+    # polygon kinds: parity-weighted mean of per-ring shoelace centroids —
+    # ring centroid c_i = Σ (v_i+v_j)·cross / (3·A2_i) (orientation
+    # cancels), weight = ±|A2_i| with the same even-odd sign as st_area,
+    # so holes subtract and multipolygon parts average area-weighted
+    seglen = "sqrt((_ls.b.x - _ls.a.x) * (_ls.b.x - _ls.a.x) + (_ls.b.y - _ls.a.y) * (_ls.b.y - _ls.a.y))"
+
+    def ring_c(field):
+        num = (
+            f"aggregate({_S_segs('_cg')}, 0.0D, (_cn, _cs) -> _cn"
+            f" + (_cs.a.{field} + _cs.b.{field})"
+            f" * (_cs.a.x * _cs.b.y - _cs.b.x * _cs.a.y))"
+        )
+        return f"({num} / (3 * nullif({_S_ring_shoelace2('_cg')}, 0.0D)))"
+
+    signed_w = (
+        f"({_S_ring_parity_sign(f'{g}.rings', '_cg')}"
+        f" * abs({_S_ring_shoelace2('_cg')}))"
+    )
+    wsum = f"nullif(aggregate({g}.rings, 0.0D, (_cw, _cg) -> _cw + {signed_w}), 0.0D)"
+    px = f"(aggregate({g}.rings, 0.0D, (_cx, _cg) -> _cx + {signed_w} * {ring_c('x')}) / {wsum})"
+    py = f"(aggregate({g}.rings, 0.0D, (_cy, _cg) -> _cy + {signed_w} * {ring_c('y')}) / {wsum})"
+    # linestring: length-weighted segment midpoints
+    total_len = (
+        f"nullif(aggregate({_S_segs(f'{g}.pts')}, 0.0D, (_ll, _ls) -> _ll + {seglen}), 0.0D)"
+    )
+    lx = (
+        f"(aggregate({_S_segs(f'{g}.pts')}, 0.0D, (_ll, _ls) -> _ll"
+        f" + (_ls.a.x + _ls.b.x) / 2 * {seglen}) / {total_len})"
+    )
+    ly = (
+        f"(aggregate({_S_segs(f'{g}.pts')}, 0.0D, (_ll, _ls) -> _ll"
+        f" + (_ls.a.y + _ls.b.y) / 2 * {seglen}) / {total_len})"
+    )
+    # point/multipoint: vertex mean
+    n = f"nullif(cast(size({g}.pts) AS DOUBLE), 0.0D)"
+    mx = f"(aggregate({g}.pts, 0.0D, (_cm, _cp) -> _cm + _cp.x) / {n})"
+    my = f"(aggregate({g}.pts, 0.0D, (_cm, _cp) -> _cm + _cp.y) / {n})"
+
+    def pt(x, y):
+        return f"named_struct('x', cast({x} AS DOUBLE), 'y', cast({y} AS DOUBLE))"
+
+    return (
+        f"CASE WHEN {g}.kind IN ('polygon', 'multipolygon') THEN {pt(px, py)}"
+        f" WHEN {g}.kind = 'linestring' THEN {pt(lx, ly)}"
+        f" ELSE {pt(mx, my)} END"
+    )
+
+
 @register("st_centroid")
 def st_centroid(g) -> Column:
     """Centroid as a POINT struct: shoelace-weighted for polygons,
     length-weighted for linestrings, vertex mean for (multi)points
     (GeoFunctions.stCentroid)."""
-    gn = _S_name(g)
-    if gn:  # r14: one-parse SQL template (guide §7.3 — see the _S_* block)
-        seglen = "sqrt((_ls.b.x - _ls.a.x) * (_ls.b.x - _ls.a.x) + (_ls.b.y - _ls.a.y) * (_ls.b.y - _ls.a.y))"
-
-        def ring_c(field):
-            num = (
-                f"aggregate({_S_segs('_cg')}, 0.0D, (_cn, _cs) -> _cn"
-                f" + (_cs.a.{field} + _cs.b.{field})"
-                f" * (_cs.a.x * _cs.b.y - _cs.b.x * _cs.a.y))"
-            )
-            return f"({num} / (3 * nullif({_S_ring_shoelace2('_cg')}, 0.0D)))"
-
-        signed_w = (
-            f"({_S_ring_parity_sign(f'{gn}.rings', '_cg')}"
-            f" * abs({_S_ring_shoelace2('_cg')}))"
-        )
-        wsum = f"nullif(aggregate({gn}.rings, 0.0D, (_cw, _cg) -> _cw + {signed_w}), 0.0D)"
-        px = f"(aggregate({gn}.rings, 0.0D, (_cx, _cg) -> _cx + {signed_w} * {ring_c('x')}) / {wsum})"
-        py = f"(aggregate({gn}.rings, 0.0D, (_cy, _cg) -> _cy + {signed_w} * {ring_c('y')}) / {wsum})"
-        total_len = (
-            f"nullif(aggregate({_S_segs(f'{gn}.pts')}, 0.0D, (_ll, _ls) -> _ll + {seglen}), 0.0D)"
-        )
-        lx = (
-            f"(aggregate({_S_segs(f'{gn}.pts')}, 0.0D, (_ll, _ls) -> _ll"
-            f" + (_ls.a.x + _ls.b.x) / 2 * {seglen}) / {total_len})"
-        )
-        ly = (
-            f"(aggregate({_S_segs(f'{gn}.pts')}, 0.0D, (_ll, _ls) -> _ll"
-            f" + (_ls.a.y + _ls.b.y) / 2 * {seglen}) / {total_len})"
-        )
-        n = f"nullif(cast(size({gn}.pts) AS DOUBLE), 0.0D)"
-        mx = f"(aggregate({gn}.pts, 0.0D, (_cm, _cp) -> _cm + _cp.x) / {n})"
-        my = f"(aggregate({gn}.pts, 0.0D, (_cm, _cp) -> _cm + _cp.y) / {n})"
-
-        def pt(x, y):
-            return (
-                f"named_struct('x', cast({x} AS DOUBLE), 'y', cast({y} AS DOUBLE))"
-            )
-
-        return F.expr(
-            f"CASE WHEN {gn}.kind IN ('polygon', 'multipolygon') THEN {pt(px, py)}"
-            f" WHEN {gn}.kind = 'linestring' THEN {pt(lx, ly)}"
-            f" ELSE {pt(mx, my)} END"
-        )
-    gg = c(g)
-    pts = gg.getField("pts")
-    kind = gg.getField("kind")
-    rings = gg.getField("rings")
-    # polygon kinds: parity-weighted mean of per-ring shoelace centroids —
-    # ring centroid c_i = Σ (v_i+v_j)·cross / (3·A2_i) (orientation
-    # cancels), weight = ±|A2_i| with the same even-odd sign as st_area,
-    # so holes subtract and multipolygon parts average area-weighted.
-    cross = lambda s: (  # noqa: E731
-        s.getField("a").getField("x") * s.getField("b").getField("y")
-        - s.getField("b").getField("x") * s.getField("a").getField("y")
-    )
-
-    def ring_c(ring, field):
-        num = F.aggregate(
-            _pts_segs(ring),
-            F.lit(0.0),
-            lambda acc, s: acc
-            + (s.getField("a").getField(field) + s.getField("b").getField(field))
-            * cross(s),
-        )
-        return num / (3 * F.nullif(_ring_shoelace2(ring), F.lit(0.0)))
-
-    def signed_w(ring):
-        return _ring_parity_sign(rings, ring) * F.abs(_ring_shoelace2(ring))
-
-    wsum = F.nullif(
-        F.aggregate(rings, F.lit(0.0), lambda acc, ring: acc + signed_w(ring)),
-        F.lit(0.0),
-    )
-    px = (
-        F.aggregate(
-            rings, F.lit(0.0), lambda acc, ring: acc + signed_w(ring) * ring_c(ring, "x")
-        )
-        / wsum
-    )
-    py = (
-        F.aggregate(
-            rings, F.lit(0.0), lambda acc, ring: acc + signed_w(ring) * ring_c(ring, "y")
-        )
-        / wsum
-    )
-    # linestring: length-weighted segment midpoints
-    total_len = F.nullif(
-        F.aggregate(_segs(gg), F.lit(0.0), lambda acc, s: acc + _seglen(s)), F.lit(0.0)
-    )
-    lx = F.aggregate(
-        _segs(gg),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + (s.getField("a").getField("x") + s.getField("b").getField("x")) / 2 * _seglen(s),
-    ) / total_len
-    ly = F.aggregate(
-        _segs(gg),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + (s.getField("a").getField("y") + s.getField("b").getField("y")) / 2 * _seglen(s),
-    ) / total_len
-    # point/multipoint: vertex mean
-    n = F.nullif(F.size(pts).cast("double"), F.lit(0.0))
-    mx = F.aggregate(pts, F.lit(0.0), lambda acc, p: acc + p.getField("x")) / n
-    my = F.aggregate(pts, F.lit(0.0), lambda acc, p: acc + p.getField("y")) / n
-    return (
-        F.when(kind.isin("polygon", "multipolygon"), _pt(px, py))
-        .when(kind == "linestring", _pt(lx, ly))
-        .otherwise(_pt(mx, my))
-    )
+    return _geo_fn("centroid", "STRUCT<x: DOUBLE, y: DOUBLE>", _S_centroid, g)
 
 
 @register("st_contains")
@@ -685,32 +596,7 @@ def st_intersects(g1, g2) -> Column:
     containment, otherwise any segment-pair intersection or full
     containment of one geometry's first vertex in the other
     (GeoFunctions.stIntersects)."""
-    an, bn = _S_name(g1), _S_name(g2)
-    if an and bn:  # r14: one-parse SQL template (see the _S_* block below)
-        return F.expr(_S_intersects(an, bn))
-    a, b = c(g1), c(g2)
-    a_pt, b_pt = a.getField("kind").isin("point", "multipoint"), b.getField("kind").isin(
-        "point", "multipoint"
-    )
-    seg_hit = F.exists(
-        _segs(a), lambda s1: F.exists(_segs(b), lambda s2: _seg_intersects(s1, s2))
-    )
-    a_in_b = st_contains(b, F.element_at(a.getField("pts"), 1))
-    b_in_a = st_contains(a, F.element_at(b.getField("pts"), 1))
-    pt_hit = F.exists(
-        a.getField("pts"),
-        lambda p: F.exists(
-            b.getField("pts"),
-            lambda q: (p.getField("x") == q.getField("x"))
-            & (p.getField("y") == q.getField("y")),
-        ),
-    )
-    return (
-        F.when(a_pt & b_pt, pt_hit)
-        .when(a_pt, F.exists(a.getField("pts"), lambda p: st_contains(b, p)))
-        .when(b_pt, F.exists(b.getField("pts"), lambda p: st_contains(a, p)))
-        .otherwise(seg_hit | a_in_b | b_in_a)
-    )
+    return _geo_fn("intersects", "BOOLEAN", _S_intersects, g1, g2)
 
 
 @register("st_as_text_geom")
@@ -1267,10 +1153,7 @@ def _geom_pandas(fn, extra=()):
     OFF the relational hot path."""
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf(
-        "struct<kind:string,pts:array<struct<x:double,y:double>>,"
-        "rings:array<array<struct<x:double,y:double>>>>"
-    )
+    @pandas_udf(_GEOM_DDL)
     def _f(s):
         import pandas as pd
 
@@ -1459,26 +1342,43 @@ def st_equals(g1, g2) -> Column:
     return (a.getField("kind") == b.getField("kind")) & (canon(a) == canon(b))
 
 
-# --- topological predicates (GeoFunctions.java stCrosses:869, stOverlaps:926,
-# --- stTouches:953) — native expressions over ring segments -----------------
+# --- predicates and measures as SQL functions (GeoFunctions.java stArea,
+# --- stCentroid, stIntersects, stCrosses:869, stOverlaps:926, stTouches:953,
+# --- stRelate:941) -----------------------------------------------------------
 #
-# r14 (guide §7.3 driver-side work): the Column-API forms below pay one
-# py4j round-trip PER OPERATOR, and the nested exists()-over-segments
-# predicates are thousands of operators — st_touches alone cost ~3.5 s
-# of DRIVER time per construction (measured: fn_geo_set_ops spent 17 s
-# of its 19 s construction inside these four predicates' lambda
-# building).  When both operands are plain column NAMES (every query-
-# catalog call site), the predicate is instead rendered as ONE SQL
-# string by the pure-Python ``_S_*`` templates below and parsed with a
-# single F.expr — same expressions, no per-operator round-trips.
-# Column operands (tests, nested-expression callers) keep the original
-# Column-API path; both paths are pinned equal by
-# tests/test_geo_properties.py and the geo gate queries.
+# Each of these has ONE implementation: a pure-Python ``_S_*`` template
+# that renders Spark SQL text over named GEOM operands.  On first use in
+# a session, _geo_fn registers the template as the temporary SQL function
+# ``__geo_<name>``, and the public builder returns a call to it for column
+# names and Column operands alike.  Spark inlines the body into the
+# Project (no UDF node), and building the call costs a handful of py4j
+# round trips however large the body is — a Column-API spelling of the
+# nested exists()-over-segments predicates is thousands of operators, one
+# round trip each.  Inside higher-order-function bodies the templates stay
+# text macros (the templates nest each other that way).  Two limits:
+#   - an operand that is a lambda variable fails analysis
+#     (MISSING_ATTRIBUTES): a SQL function cannot take one as an argument;
+#   - the function is registered in the session that is active when the
+#     Column is built, so the Column resolves only in that session.
+# Spark analyzes a body once when it is registered and again at every call
+# site, in time proportional to its size: keep the templates small (each
+# probe written once) rather than relying on the call being cheap.
 
 
-def _S_name(g) -> str | None:
-    """SQL fast-path key: the operand as a plain identifier, else None."""
-    return g if isinstance(g, str) and g.isidentifier() else None
+def _geo_fn(name: str, returns: str, template, *geoms) -> Column:
+    """Call ``template`` over ``geoms`` as the active session's SQL
+    function ``__geo_<name>``, registering it there on first use (the
+    session's catalog is the record of what is registered)."""
+    fn = f"__geo_{name}"
+    spark = SparkSession.active()
+    if not spark.catalog.functionExists(fn):
+        params = ("_ga", "_gb")[: len(geoms)]
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {fn}"
+            f"({', '.join(f'{p} {_GEOM_DDL}' for p in params)})"
+            f" RETURNS {returns} RETURN {template(*params)}"
+        )
+    return F.call_function(fn, *(c(g) for g in geoms))
 
 
 def _S_segs(pts: str) -> str:
@@ -1619,6 +1519,16 @@ def _S_intersects(a: str, b: str) -> str:
 
 
 def _S_interiors_intersect(a: str, b: str) -> str:
+    """dim-aware interior∩interior ≠ ∅ test from vertex probes + segment
+    crossings (exact for the generic-position shapes the engine models).
+    Each probe is written once, guarded by the kind pairs that use it:
+    polygon × polygon — a transversal boundary crossing or a vertex of
+    one strictly inside the other; line × polygon — the line passes
+    through the interior; line × line — a crossing or a collinear 1-dim
+    overlap; point × polygon — the point is interior; point × line — a
+    point on the line that is not an endpoint; point × point (and
+    unknown kinds) — a shared point."""
+    kinds = "('polygon', 'multipolygon', 'linestring', 'point', 'multipoint')"
     a_poly = f"{a}.kind IN ('polygon', 'multipolygon')"
     b_poly = f"{b}.kind IN ('polygon', 'multipolygon')"
     a_line, b_line = f"{a}.kind = 'linestring'", f"{b}.kind = 'linestring'"
@@ -1630,13 +1540,6 @@ def _S_interiors_intersect(a: str, b: str) -> str:
             f"exists(flatten({g}.rings), _v1 -> {_S_strictly_inside(other, '_v1')})"
         )
 
-    same_pt = (
-        f"exists({a}.pts, _q1 -> exists({b}.pts, _q2 ->"
-        f" (_q1.x = _q2.x) AND (_q1.y = _q2.y)))"
-    )
-    pc = _S_proper_cross_any(a, b)
-    via, vib = vertex_in(a, b), vertex_in(b, a)
-
     def pt_on_line_interior(pts_g, line_g):
         return (
             f"exists({pts_g}.pts, _q5 -> ({_S_on_boundary(line_g, '_q5')})"
@@ -1646,165 +1549,59 @@ def _S_interiors_intersect(a: str, b: str) -> str:
             f" AND (_q5.y = element_at({line_g}.pts, -1).y)))"
         )
 
+    same_pt = (
+        f"exists({a}.pts, _q1 -> exists({b}.pts, _q2 ->"
+        f" (_q1.x = _q2.x) AND (_q1.y = _q2.y)))"
+    )
     return (
-        f"CASE WHEN ({a_poly}) AND ({b_poly}) THEN ({pc}) OR ({via}) OR ({vib})"
-        f" WHEN ({a_line}) AND ({b_poly}) THEN ({pc}) OR ({via})"
-        f" WHEN ({b_line}) AND ({a_poly}) THEN ({pc}) OR ({vib})"
-        f" WHEN ({a_line}) AND ({b_line}) THEN ({pc}) OR ({_S_collinear_overlap_any(a, b)})"
-        f" WHEN ({a_pt}) AND ({b_poly}) THEN {via}"
-        f" WHEN ({b_pt}) AND ({a_poly}) THEN {vib}"
-        f" WHEN ({a_pt}) AND ({b_line}) THEN {pt_on_line_interior(a, b)}"
-        f" WHEN ({b_pt}) AND ({a_line}) THEN {pt_on_line_interior(b, a)}"
+        f"CASE WHEN {a}.kind IN {kinds} AND {b}.kind IN {kinds}"
+        f" AND NOT (({a_pt}) AND ({b_pt})) THEN"
+        f" (NOT ({a_pt}) AND NOT ({b_pt}) AND ({_S_proper_cross_any(a, b)}))"
+        f" OR (({b_poly}) AND ({vertex_in(a, b)}))"
+        f" OR (({a_poly}) AND ({vertex_in(b, a)}))"
+        f" OR (({a_line}) AND ({b_line}) AND ({_S_collinear_overlap_any(a, b)}))"
+        f" OR (({a_pt}) AND ({b_line}) AND ({pt_on_line_interior(a, b)}))"
+        f" OR (({b_pt}) AND ({a_line}) AND ({pt_on_line_interior(b, a)}))"
         f" ELSE {same_pt} END"
     )
 
 
-def _all_segs(g: Column) -> Column:
-    """Segments of EVERY ring — the full boundary for polygon kinds
-    (holes included), ≡ _segs for single-ring geometries."""
-    return F.flatten(F.transform(g.getField("rings"), _pts_segs))
+def _S_crosses(a: str, b: str) -> str:
+    a_line, b_line = f"{a}.kind = 'linestring'", f"{b}.kind = 'linestring'"
+    a_poly = f"{a}.kind IN ('polygon', 'multipolygon')"
+    b_poly = f"{b}.kind IN ('polygon', 'multipolygon')"
+    both_lines = f"({a_line}) AND ({b_line})"
 
+    def vsi(g, other):
+        return f"exists({g}.pts, _w1 -> {_S_strictly_inside(other, '_w1')})"
 
-def _orient(p, q, r):
-    return (q.getField("x") - p.getField("x")) * (r.getField("y") - p.getField("y")) - (
-        q.getField("y") - p.getField("y")
-    ) * (r.getField("x") - p.getField("x"))
+    def vso(g, other):
+        return f"exists({g}.pts, _w2 -> {_S_strictly_outside(other, '_w2')})"
 
-
-def _on_boundary(g: Column, p: Column) -> Column:
-    """Point sits on some boundary segment (collinear + inside bbox)."""
-    return F.exists(
-        _all_segs(g),
-        lambda s: (_orient(s.getField("a"), s.getField("b"), p) == 0)
-        & (p.getField("x") <= F.greatest(s.getField("a").getField("x"), s.getField("b").getField("x")))
-        & (p.getField("x") >= F.least(s.getField("a").getField("x"), s.getField("b").getField("x")))
-        & (p.getField("y") <= F.greatest(s.getField("a").getField("y"), s.getField("b").getField("y")))
-        & (p.getField("y") >= F.least(s.getField("a").getField("y"), s.getField("b").getField("y"))),
-    )
-
-
-def _strictly_inside(g: Column, p: Column) -> Column:
-    """Interior containment: odd ray-cast parity AND not on the boundary."""
-    return (
-        (_all_crossings(g, p.getField("x"), p.getField("y")) % 2 == 1)
-        & ~_on_boundary(g, p)
-    )
-
-
-def _strictly_outside(g: Column, p: Column) -> Column:
-    return (
-        (_all_crossings(g, p.getField("x"), p.getField("y")) % 2 == 0)
-        & ~_on_boundary(g, p)
-    )
-
-
-def _proper_cross_any(a: Column, b: Column) -> Column:
-    """Some segment pair crosses transversally (interior intersection)."""
-
-    def proper(s1, s2):
-        o1 = _orient(s1.getField("a"), s1.getField("b"), s2.getField("a"))
-        o2 = _orient(s1.getField("a"), s1.getField("b"), s2.getField("b"))
-        o3 = _orient(s2.getField("a"), s2.getField("b"), s1.getField("a"))
-        o4 = _orient(s2.getField("a"), s2.getField("b"), s1.getField("b"))
-        return (o1 * o2 < 0) & (o3 * o4 < 0)
-
-    return F.exists(_all_segs(a), lambda s1: F.exists(_all_segs(b), lambda s2: proper(s1, s2)))
-
-
-def _collinear_overlap_any(a: Column, b: Column) -> Column:
-    """Some segment pair is collinear with >1 shared point (1-dim overlap)."""
-
-    def over(s1, s2):
-        collinear = (
-            _orient(s1.getField("a"), s1.getField("b"), s2.getField("a")) == 0
-        ) & (_orient(s1.getField("a"), s1.getField("b"), s2.getField("b")) == 0)
-        ax1 = F.least(s1.getField("a").getField("x"), s1.getField("b").getField("x"))
-        ax2 = F.greatest(s1.getField("a").getField("x"), s1.getField("b").getField("x"))
-        bx1 = F.least(s2.getField("a").getField("x"), s2.getField("b").getField("x"))
-        bx2 = F.greatest(s2.getField("a").getField("x"), s2.getField("b").getField("x"))
-        ay1 = F.least(s1.getField("a").getField("y"), s1.getField("b").getField("y"))
-        ay2 = F.greatest(s1.getField("a").getField("y"), s1.getField("b").getField("y"))
-        by1 = F.least(s2.getField("a").getField("y"), s2.getField("b").getField("y"))
-        by2 = F.greatest(s2.getField("a").getField("y"), s2.getField("b").getField("y"))
-        return collinear & (
-            (F.least(ax2, bx2) > F.greatest(ax1, bx1))
-            | (F.least(ay2, by2) > F.greatest(ay1, by1))
+    def mp_cross(mp, other):
+        # multipoint × line/polygon: some point interior, some exterior
+        return (
+            f"exists({mp}.pts, _w3 -> ({_S_strictly_inside(other, '_w3')})"
+            f" OR ({_S_on_boundary(other, '_w3')}))"
+            f" AND exists({mp}.pts, _w4 -> {_S_strictly_outside(other, '_w4')})"
         )
 
-    return F.exists(_all_segs(a), lambda s1: F.exists(_all_segs(b), lambda s2: over(s1, s2)))
-
-
-def _interiors_intersect(a: Column, b: Column) -> Column:
-    """dim-aware interior∩interior ≠ ∅ test from vertex probes + segment
-    crossings (exact for the generic-position shapes the engine models)."""
-    ak, bk = a.getField("kind"), b.getField("kind")
-    a_poly = ak.isin("polygon", "multipolygon")
-    b_poly = bk.isin("polygon", "multipolygon")
-    a_line, b_line = ak == "linestring", bk == "linestring"
-    a_pt = ak.isin("point", "multipoint")
-    b_pt = bk.isin("point", "multipoint")
-    vertex_in = lambda g, other: F.exists(  # noqa: E731
-        F.flatten(g.getField("rings")), lambda p: _strictly_inside(other, p)
-    )
-    same_pt = F.exists(
-        a.getField("pts"),
-        lambda p: F.exists(
-            b.getField("pts"),
-            lambda q: (p.getField("x") == q.getField("x"))
-            & (p.getField("y") == q.getField("y")),
-        ),
-    )
-    # build each heavy subtree ONCE and reuse the Column object across
-    # branches — Column trees are immutable, and rebuilding an O(segs²)
-    # exists() per branch costs seconds of py4j round trips at plan time
-    pc = _proper_cross_any(a, b)
-    via, vib = vertex_in(a, b), vertex_in(b, a)
+    # line × line: a proper crossing and no collinear overlap; line ×
+    # polygon: a vertex outside, and either one inside or a proper
+    # crossing of the boundary (a pass-through between outside vertices)
     return (
-        # polygon × polygon: transversal boundary crossing or a vertex of
-        # one strictly inside the other
-        F.when(a_poly & b_poly, pc | via | vib)
-        # line × polygon: line passes through the interior
-        .when(a_line & b_poly, pc | via)
-        .when(b_line & a_poly, pc | vib)
-        # line × line: transversal crossing or collinear 1-dim overlap
-        .when(a_line & b_line, pc | _collinear_overlap_any(a, b))
-        # point × polygon: the point is interior
-        .when(a_pt & b_poly, via)
-        .when(b_pt & a_poly, vib)
-        # point × line: a shared vertex that is not a line endpoint would be
-        # needed; vertex probes approximate interior as on-segment-not-endpoint
-        .when(
-            a_pt & b_line,
-            F.exists(
-                a.getField("pts"),
-                lambda p: _on_boundary(b, p)
-                & ~(
-                    (p.getField("x") == F.element_at(b.getField("pts"), 1).getField("x"))
-                    & (p.getField("y") == F.element_at(b.getField("pts"), 1).getField("y"))
-                )
-                & ~(
-                    (p.getField("x") == F.element_at(b.getField("pts"), -1).getField("x"))
-                    & (p.getField("y") == F.element_at(b.getField("pts"), -1).getField("y"))
-                ),
-            ),
-        )
-        .when(
-            b_pt & a_line,
-            F.exists(
-                b.getField("pts"),
-                lambda p: _on_boundary(a, p)
-                & ~(
-                    (p.getField("x") == F.element_at(a.getField("pts"), 1).getField("x"))
-                    & (p.getField("y") == F.element_at(a.getField("pts"), 1).getField("y"))
-                )
-                & ~(
-                    (p.getField("x") == F.element_at(a.getField("pts"), -1).getField("x"))
-                    & (p.getField("y") == F.element_at(a.getField("pts"), -1).getField("y"))
-                ),
-            ),
-        )
-        # point × point: interiors are the points themselves
-        .otherwise(same_pt)
+        f"CASE WHEN (({a_line}) AND (({b_line}) OR ({b_poly})))"
+        f" OR (({b_line}) AND ({a_poly})) THEN"
+        f" (CASE WHEN {both_lines} THEN NOT ({_S_collinear_overlap_any(a, b)})"
+        f" WHEN {a_line} THEN {vso(a, b)} ELSE {vso(b, a)} END)"
+        f" AND ((CASE WHEN {both_lines} THEN false"
+        f" WHEN {a_line} THEN {vsi(a, b)} ELSE {vsi(b, a)} END)"
+        f" OR ({_S_proper_cross_any(a, b)}))"
+        f" WHEN ({a}.kind = 'multipoint') AND (({b_line}) OR ({b_poly}))"
+        f" THEN {mp_cross(a, b)}"
+        f" WHEN ({b}.kind = 'multipoint') AND (({a_line}) OR ({a_poly}))"
+        f" THEN {mp_cross(b, a)}"
+        f" ELSE false END"
     )
 
 
@@ -1813,79 +1610,29 @@ def st_crosses(g1, g2) -> Column:
     """ST_Crosses (GeoFunctions.stCrosses): interiors share a point of
     LOWER dimension than max(dim a, dim b) — line transversally crossing
     a line (at a point) or a polygon (entering and leaving)."""
-    an, bn = _S_name(g1), _S_name(g2)
-    if an and bn:  # r14: one-parse SQL template (see _S_* block above)
-        a_line, b_line = f"{an}.kind = 'linestring'", f"{bn}.kind = 'linestring'"
-        a_poly = f"{an}.kind IN ('polygon', 'multipolygon')"
-        b_poly = f"{bn}.kind IN ('polygon', 'multipolygon')"
-        pc = _S_proper_cross_any(an, bn)
+    return _geo_fn("crosses", "BOOLEAN", _S_crosses, g1, g2)
 
-        def vsi(g, other):
-            return f"exists({g}.pts, _w1 -> {_S_strictly_inside(other, '_w1')})"
 
-        def vso(g, other):
-            return f"exists({g}.pts, _w2 -> {_S_strictly_outside(other, '_w2')})"
+def _S_dimension(g: str) -> str:
+    return (
+        f"CASE WHEN {g}.kind IN ('point', 'multipoint') THEN 0"
+        f" WHEN {g}.kind = 'linestring' THEN 1 ELSE 2 END"
+    )
 
-        def line_x_poly(line, poly):
-            return (
-                f"(({vsi(line, poly)}) AND ({vso(line, poly)}))"
-                f" OR (({pc}) AND ({vso(line, poly)}))"
-            )
 
-        def mp_cross(mp, other):
-            return (
-                f"exists({mp}.pts, _w3 -> ({_S_strictly_inside(other, '_w3')})"
-                f" OR ({_S_on_boundary(other, '_w3')}))"
-                f" AND exists({mp}.pts, _w4 -> {_S_strictly_outside(other, '_w4')})"
-            )
-
-        return F.expr(
-            f"CASE WHEN ({a_line}) AND ({b_line}) THEN"
-            f" ({pc}) AND NOT ({_S_collinear_overlap_any(an, bn)})"
-            f" WHEN ({a_line}) AND ({b_poly}) THEN {line_x_poly(an, bn)}"
-            f" WHEN ({b_line}) AND ({a_poly}) THEN {line_x_poly(bn, an)}"
-            f" WHEN ({an}.kind = 'multipoint') AND (({b_line}) OR ({b_poly}))"
-            f" THEN {mp_cross(an, bn)}"
-            f" WHEN ({bn}.kind = 'multipoint') AND (({a_line}) OR ({a_poly}))"
-            f" THEN {mp_cross(bn, an)}"
-            f" ELSE false END"
+def _S_overlaps(a: str, b: str) -> str:
+    # neither covers the other: g covers `other` when no vertex of other
+    # is strictly outside g and no boundaries cross properly
+    def escapes(g, other):
+        return (
+            f"exists(flatten({other}.rings), _w5 -> {_S_strictly_outside(g, '_w5')})"
         )
-    a, b = c(g1), c(g2)
-    ak, bk = a.getField("kind"), b.getField("kind")
-    a_line, b_line = ak == "linestring", bk == "linestring"
-    a_poly = ak.isin("polygon", "multipolygon")
-    b_poly = bk.isin("polygon", "multipolygon")
-    vertex_strict_in = lambda g, other: F.exists(  # noqa: E731
-        g.getField("pts"), lambda p: _strictly_inside(other, p)
-    )
-    vertex_strict_out = lambda g, other: F.exists(  # noqa: E731
-        g.getField("pts"), lambda p: _strictly_outside(other, p)
-    )
-
-    pc = _proper_cross_any(a, b)  # symmetric; built once, shared
-
-    def line_x_poly(line, poly):
-        # in-and-out via vertices, or a pass-through between two outside
-        # vertices (proper crossing of the boundary)
-        out = vertex_strict_out(line, poly)
-        return (vertex_strict_in(line, poly) & out) | (pc & out)
 
     return (
-        F.when(a_line & b_line, pc & ~_collinear_overlap_any(a, b))
-        .when(a_line & b_poly, line_x_poly(a, b))
-        .when(b_line & a_poly, line_x_poly(b, a))
-        # multipoint × line/polygon: some point interior, some exterior
-        .when(
-            (ak == "multipoint") & (b_line | b_poly),
-            F.exists(a.getField("pts"), lambda p: _strictly_inside(b, p) | _on_boundary(b, p))
-            & F.exists(a.getField("pts"), lambda p: _strictly_outside(b, p)),
-        )
-        .when(
-            (bk == "multipoint") & (a_line | a_poly),
-            F.exists(b.getField("pts"), lambda p: _strictly_inside(a, p) | _on_boundary(a, p))
-            & F.exists(b.getField("pts"), lambda p: _strictly_outside(a, p)),
-        )
-        .otherwise(F.lit(False))
+        f"({_S_dimension(a)} = {_S_dimension(b)})"
+        f" AND ({_S_interiors_intersect(a, b)})"
+        f" AND ((({escapes(a, b)}) AND ({escapes(b, a)}))"
+        f" OR ({_S_proper_cross_any(a, b)}))"
     )
 
 
@@ -1893,52 +1640,24 @@ def st_crosses(g1, g2) -> Column:
 def st_overlaps(g1, g2) -> Column:
     """ST_Overlaps (GeoFunctions.stOverlaps): same dimension, interiors
     intersect, neither geometry covers the other."""
-    an, bn = _S_name(g1), _S_name(g2)
-    if an and bn:  # r14: one-parse SQL template (see _S_* block above)
-        pc = _S_proper_cross_any(an, bn)
+    return _geo_fn("overlaps", "BOOLEAN", _S_overlaps, g1, g2)
 
-        def covers(g, other):
-            return (
-                f"(NOT exists(flatten({other}.rings), _w5 ->"
-                f" {_S_strictly_outside(g, '_w5')})) AND NOT ({pc})"
-            )
 
-        return (
-            (st_dimension(an) == st_dimension(bn))
-            & F.expr(
-                f"({_S_interiors_intersect(an, bn)})"
-                f" AND NOT ({covers(an, bn)}) AND NOT ({covers(bn, an)})"
-            )
-        )
-    a, b = c(g1), c(g2)
-    same_dim = st_dimension(a) == st_dimension(b)
-    pc = _proper_cross_any(a, b)  # symmetric; built once, shared
-    covers = lambda g, other: (  # noqa: E731
-        ~F.exists(
-            F.flatten(other.getField("rings")), lambda p: _strictly_outside(g, p)
-        )
-        & ~pc
-    )
-    return (
-        same_dim
-        & _interiors_intersect(a, b)
-        & ~covers(a, b)
-        & ~covers(b, a)
-    )
+def _S_touches(a: str, b: str) -> str:
+    return f"({_S_intersects(a, b)}) AND NOT ({_S_interiors_intersect(a, b)})"
 
 
 @register("st_touches")
 def st_touches(g1, g2) -> Column:
     """ST_Touches (GeoFunctions.stTouches): geometries intersect but
     their interiors don't — contact only along boundaries."""
-    an, bn = _S_name(g1), _S_name(g2)
-    if an and bn:  # r14: one-parse SQL template (see _S_* block above)
-        return F.expr(
-            f"({_S_intersects(an, bn)})"
-            f" AND NOT ({_S_interiors_intersect(an, bn)})"
-        )
-    a, b = c(g1), c(g2)
-    return st_intersects(a, b) & ~_interiors_intersect(a, b)
+    return _geo_fn("touches", "BOOLEAN", _S_touches, g1, g2)
+
+
+def _all_segs(g: Column) -> Column:
+    """Segments of EVERY ring — the full boundary for polygon kinds
+    (holes included), ≡ _segs for single-ring geometries."""
+    return F.flatten(F.transform(g.getField("rings"), _pts_segs))
 
 
 @register("st_distance_geom")
@@ -1992,14 +1711,51 @@ def st_distance_geom(g1, g2) -> Column:
     return F.when(st_intersects(a, b), F.lit(0.0)).otherwise(F.sqrt(d2))
 
 
+# DE-9IM cells in pattern order; EE (exterior × exterior) is always
+# non-empty because the plane is unbounded
+_DE9IM = ("ii", "ib", "ie", "bi", "bb", "be", "ei", "eb", "ee")
+
+
+def _S_relate_cell(cell: str, a: str, b: str) -> str:
+    """One DE-9IM cell as a boolean from the interior/boundary probes."""
+    if cell == "ii":
+        return _S_interiors_intersect(a, b)
+    if cell == "bb":
+        return (
+            f"exists({_S_all_segs(a)}, _z1 -> exists({_S_all_segs(b)}, _z2 ->"
+            f" {_S_seg_intersects('_z1', '_z2')}))"
+        )
+    pc = _S_proper_cross_any(a, b)
+    if cell in ("ib", "bi"):  # a boundary meets the other's interior (≈ symmetric probe)
+        g, other = (b, a) if cell == "ib" else (a, b)
+        return (
+            f"(exists(flatten({g}.rings), _z5 -> {_S_strictly_inside(other, '_z5')}))"
+            f" OR ({pc})"
+        )
+    # be/eb: a boundary reaches the other's exterior; ie/ei: an interior escapes it
+    g, other = (a, b) if cell in ("be", "ie") else (b, a)
+    escapes = f"exists(flatten({g}.rings), _z3 -> {_S_strictly_outside(other, '_z3')})"
+    return escapes if cell in ("be", "eb") else f"({escapes}) OR ({pc})"
+
+
+def _S_relate(pat: str, a: str, b: str) -> str:
+    """The conjunction of the cells a T/F/* pattern names; cells under
+    '*' are not built."""
+    conj = []
+    for ch, cell in zip(pat, _DE9IM):
+        if ch != "*":
+            text = "true" if cell == "ee" else _S_relate_cell(cell, a, b)
+            conj.append(f"({text})" if ch == "T" else f"(NOT ({text}))")
+    return " AND ".join(conj) if conj else "true"
+
+
 @register("st_relate")
 def st_relate(g1, g2, pattern: str) -> Column:
-    """ST_Relate(a, b, 'T*F**F***') (GeoFunctions.stRelate) — DE-9IM:
-    T/F/* pattern positions evaluate natively, with each matrix cell
-    derived as a boolean from the engine's interior/boundary
-    primitives.  Dimension digits (0/1/2) require exact intersection
-    DIMENSIONS — computed exactly for EVERY supported kind pair
-    (round 10): areal ring sets (simple, holed, MULTIPOLYGON — interior
+    """ST_Relate(a, b, 'T*F**F***') (GeoFunctions.stRelate) — DE-9IM.
+    T/F/* patterns evaluate natively, one SQL function per pattern that
+    holds only the cells the pattern names (_S_relate).  Dimension
+    digits (0/1/2) require exact intersection DIMENSIONS — computed
+    exactly for EVERY supported kind pair (round 10): areal ring sets (simple, holed, MULTIPOLYGON — interior
     areas via even-odd inclusion-exclusion over pairwise
     Greiner–Hormann clips, boundary dims via ring-set
     split-at-intersections midpoint classification), LINESTRINGs and
@@ -2007,63 +1763,20 @@ def st_relate(g1, g2, pattern: str) -> Column:
     OGC boundary conventions; 14 canonical matrices pinned).  (Every
     ST_Relate pattern in the reference's own tests —
     TestGeoFunctions.java:689 — is T/F/* only.)"""
-    a, b = c(g1), c(g2)
     pat = pattern.upper()
     if len(pat) != 9:
         raise ValueError("DE-9IM pattern must have 9 characters")
+    bad = sorted(set(pat) - set("TF*012"))
+    if bad:
+        raise ValueError(f"DE-9IM pattern characters must be T, F, *, 0, 1 or 2; got {bad}")
     if any(ch in "012" for ch in pat):
         from prestodb_presto_spark.functions.geo_setops import relate_exact
 
-        return relate_exact(pat)(a, b)
-    an, bn = _S_name(g1), _S_name(g2)
-    if an and bn:  # r14: one-parse SQL template (see the _S_* block above)
-        pc = _S_proper_cross_any(an, bn)
-        s_bb = (
-            f"exists({_S_all_segs(an)}, _z1 -> exists({_S_all_segs(bn)}, _z2 ->"
-            f" {_S_seg_intersects('_z1', '_z2')}))"
-        )
-        s_out_a = f"exists(flatten({an}.rings), _z3 -> {_S_strictly_outside(bn, '_z3')})"
-        s_out_b = f"exists(flatten({bn}.rings), _z4 -> {_S_strictly_outside(an, '_z4')})"
-        s_bi = f"(exists(flatten({an}.rings), _z5 -> {_S_strictly_inside(bn, '_z5')})) OR ({pc})"
-        s_ib = f"(exists(flatten({bn}.rings), _z6 -> {_S_strictly_inside(an, '_z6')})) OR ({pc})"
-        sql_cells = [
-            _S_interiors_intersect(an, bn),   # II
-            s_ib,                             # IB
-            f"({s_out_a}) OR ({pc})",         # IE
-            s_bi,                             # BI
-            s_bb,                             # BB
-            s_out_a,                          # BE
-            f"({s_out_b}) OR ({pc})",         # EI
-            s_out_b,                          # EB
-            "true",                           # EE
-        ]
-        conj = []
-        for ch, cell in zip(pat, sql_cells):
-            if ch in ("T", "0", "1", "2"):
-                conj.append(f"({cell})")
-            elif ch == "F":
-                conj.append(f"(NOT ({cell}))")
-        return F.expr(" AND ".join(conj) if conj else "true")
-    bb = F.exists(_all_segs(a), lambda s1: F.exists(_all_segs(b), lambda s2: _seg_intersects(s1, s2)))
-    out_a = F.exists(F.flatten(a.getField("rings")), lambda p: _strictly_outside(b, p))
-    out_b = F.exists(F.flatten(b.getField("rings")), lambda p: _strictly_outside(a, p))
-    bi = F.exists(F.flatten(a.getField("rings")), lambda p: _strictly_inside(b, p)) | _proper_cross_any(a, b)
-    ib = F.exists(F.flatten(b.getField("rings")), lambda p: _strictly_inside(a, p)) | _proper_cross_any(a, b)
-    cells = [
-        _interiors_intersect(a, b),     # II
-        ib,                             # IB: A's interior meets B's boundary (≈ symmetric probe)
-        out_a | _proper_cross_any(a, b),  # IE: A's interior escapes B
-        bi,                             # BI
-        bb,                             # BB
-        out_a,                          # BE: A's boundary reaches B's exterior
-        out_b | _proper_cross_any(a, b),  # EI
-        out_b,                          # EB
-        F.lit(True),                    # EE: exteriors always meet (plane is unbounded)
-    ]
-    result = F.lit(True)
-    for ch, cell in zip(pat, cells):
-        if ch in ("T", "0", "1", "2"):
-            result = result & cell
-        elif ch == "F":
-            result = result & ~cell
-    return result
+        return relate_exact(pat)(c(g1), c(g2))
+    return _geo_fn(
+        f"relate_{pat.replace('*', 'x')}",
+        "BOOLEAN",
+        functools.partial(_S_relate, pat),
+        g1,
+        g2,
+    )

@@ -401,10 +401,8 @@ def fn_geo_polygon_ops(spark, sf_dir):
         F.lit("POLYGON ((0 0, "), s.cast("string"), F.lit(" 0, 0 "),
         h.cast("string"), F.lit(", 0 0))"),
     )
-    # r14 (guide §7.3): the geometry is projected ONCE under a name so the
-    # measure calls hit the geo predicates' SQL-template fast path (one
-    # F.expr parse instead of thousands of py4j Column ops — construction
-    # 4.8 s → sub-second) and the WKT parse tree is not inlined per use.
+    # the geometry is projected ONCE under a name so the WKT parse tree
+    # is not inlined into every reference inside the measures' bodies
     geoms = part.select(
         "p_partkey",
         P.st_polygon(wkt).alias("g"),

@@ -28,7 +28,8 @@ import duckdb
 import pytest
 
 from prestodb_presto_spark.dialect import translate
-from tests.abstract_queries_scrape import oracle_compat, scrape
+from tests.abstract_queries_scrape import REF_TESTS_DIR, oracle_compat, scrape
+from tests.conftest import require_reference
 from tests.test_reference_abstract_queries import aq_env  # noqa: F401 — fixture
 
 # r14 (VERDICT #6): golden/fuzz suite — excluded from the default
@@ -189,13 +190,11 @@ def _balanced_outside_literals(sql: str) -> bool:
 
 @pytest.fixture(scope="module")
 def corpus():
-    cases = [
+    require_reference(REF_TESTS_DIR)
+    return [
         (method, k, kind, actual, expected)
         for _f, method, k, kind, actual, expected in scrape()
     ]
-    if not cases:
-        pytest.skip("reference checkout not present")
-    return cases
 
 
 def test_fuzz_structural_invariants(corpus):

@@ -549,3 +549,23 @@ def test_snowball_stemmers_reference_cases():
     ]
     bad = [(l, w, STEMMERS[l](w), e) for l, w, e in cases if STEMMERS[l](w) != e]
     assert not bad, bad
+
+
+def test_day_of_week_sql_path_matches_registry(engine):
+    """day_of_week / dow through Engine.sql(dialect="presto") are ISO
+    (1 = Monday .. 7 = Sunday), the values P.day_of_week gives on the
+    same rows (DateTimeFunctions.dayOfWeek)."""
+    sql = engine.sql(
+        "SELECT o_orderkey, o_orderdate,"
+        " day_of_week(o_orderdate) AS d_date,"
+        " dow(CAST(o_orderdate AS TIMESTAMP)) AS d_ts"
+        " FROM orders WHERE o_orderkey <= 200",
+        dialect="presto",
+    )
+    rows = sql.select(
+        "o_orderdate", "d_date", "d_ts", P.day_of_week("o_orderdate").alias("registry")
+    ).collect()
+    assert len(rows) > 20
+    assert {r.registry for r in rows} == set(range(1, 8))
+    for r in rows:
+        assert r.d_date == r.d_ts == r.registry == r.o_orderdate.isoweekday(), r

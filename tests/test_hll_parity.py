@@ -13,7 +13,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from tests.abstract_queries_scrape import scrape
+from tests.abstract_queries_scrape import REF_TESTS_DIR, scrape
+from tests.conftest import require_reference
 from tests.test_reference_abstract_queries import aq_env  # noqa: F401 — fixture
 
 # r14 (VERDICT #6): golden/fuzz suite — excluded from the default
@@ -39,6 +40,7 @@ def test_xxh64_spec_vectors():
 def test_reference_approx_distinct_assertions_exact(aq_env):
     """All scraped testApproximateCountDistinct cases: our value == the
     airlift value the reference asserts (engine SQL path)."""
+    require_reference(REF_TESTS_DIR)
     engine, _fresh = aq_env
     cases = [
         (k, actual, expected)

@@ -52,7 +52,8 @@ import duckdb
 import pytest
 
 from prestodb_presto_spark.testing import _tolerant_cell as _tc0
-from tests.abstract_queries_scrape import oracle_compat, scrape
+from tests.abstract_queries_scrape import REF_TESTS_DIR, oracle_compat, scrape
+from tests.conftest import require_reference
 
 # r14 (VERDICT #6): golden/fuzz suite — excluded from the default
 # driver-window run; see pytest.ini (reference AbstractTestQueries scrape-and-replay (~6.5 min)).
@@ -193,9 +194,8 @@ def _compare(sdf, con, oracle_sql, ordered):
 
 
 def test_reference_abstract_queries(aq_env):
+    require_reference(REF_TESTS_DIR)
     cases = list(scrape())
-    if not cases:
-        pytest.skip("reference checkout not present")
     engine, fresh_con = aq_env
     con = fresh_con()
     passed = 0

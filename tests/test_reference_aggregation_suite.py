@@ -23,8 +23,7 @@ import math
 import re
 from decimal import Decimal
 
-import pytest
-
+from tests.conftest import require_reference
 from tests.reference_literals import parse_expected, _split_top_args
 
 REF_AGG_DIR = (
@@ -257,9 +256,8 @@ OVERALL_FLOOR = 32  # of 32 scrapeable
 
 
 def test_reference_aggregations(engine):
+    require_reference(REF_AGG_DIR)
     cases = scrape_aggregations()
-    if not cases:
-        pytest.skip("reference checkout not present")
     passed: dict[str, int] = {}
     fails = []
     for fname, fn, cols, consts, expected, n in cases:

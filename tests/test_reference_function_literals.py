@@ -37,7 +37,8 @@ import math
 
 import pytest
 
-from tests.reference_literals import scrape
+from tests.conftest import require_reference
+from tests.reference_literals import REF_TEST_DIR, scrape
 
 # r14 (VERDICT #6): golden/fuzz suite — excluded from the default
 # driver-window run; see pytest.ini (reference function-literal goldens (~2 min)).
@@ -174,9 +175,8 @@ _SESSION_ZONE = {
 
 
 def test_reference_assert_function_literals(engine):
+    require_reference(REF_TEST_DIR)
     cases = list(scrape())
-    if not cases:
-        pytest.skip("reference checkout not present")
     passed: dict[str, int] = {}
     totals: dict[str, int] = {}
     regressions: list[str] = []

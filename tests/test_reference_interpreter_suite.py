@@ -20,7 +20,7 @@ import math
 import re
 from decimal import Decimal
 
-import pytest
+from tests.conftest import require_reference
 
 REF_FILE = (
     "/root/reference/presto-main/src/test/java/com/facebook/presto/sql"
@@ -87,9 +87,8 @@ def _norm(v):
 
 
 def test_reference_interpreter_pairs(engine):
+    require_reference(REF_FILE)
     pairs = scrape_pairs()
-    if not pairs:
-        pytest.skip("reference checkout not present")
     ok = 0
     fails = []
     for a, b in pairs:

@@ -21,7 +21,7 @@ import glob
 import math
 import re
 
-import pytest
+from tests.conftest import require_reference
 
 REF_WINDOW_DIR = (
     "/root/reference/presto-main/src/test/java/com/facebook/presto"
@@ -227,9 +227,8 @@ PASS_FLOORS = {
 
 
 def test_reference_window_queries(engine):
+    require_reference(REF_WINDOW_DIR)
     cases = scrape_window_cases()
-    if not cases:
-        pytest.skip("reference checkout not present")
     passed: dict[str, int] = {}
     totals: dict[str, int] = {}
     failures = []
