@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from prestodb_presto_spark.sources.io import write_table
+from prestodb_presto_spark.sqlscan import split_top, tokens
 
 
 def create_table_as(
@@ -118,20 +119,10 @@ def explain_io(plan_text: str) -> str:
         rs = re.search(r"ReadSchema: struct<([^\n]*)>", block)
         if rs:
             # bracket-aware top-level split (nested struct/array/map
-            # types carry commas of their own)
-            depth, cur, fields = 0, [], []
-            for ch in rs.group(1):
-                if ch == "<":
-                    depth += 1
-                elif ch == ">":
-                    depth -= 1
-                if ch == "," and depth == 0:
-                    fields.append("".join(cur))
-                    cur = []
-                else:
-                    cur.append(ch)
-            if cur:
-                fields.append("".join(cur))
+            # and decimal types carry commas of their own)
+            fields = split_top(rs.group(1), "()<>")
+            if not fields[-1]:
+                fields.pop()
             for fld in fields:
                 cname, _, ctype = fld.partition(":")
                 cols.append({"columnName": cname.strip(), "type": ctype.strip()})
@@ -441,27 +432,15 @@ def rename_schema(spark: SparkSession, old: str, new: str) -> None:
     import re as _re
 
     def _rewrite_outside_literals(text: str) -> str:
-        # r13 (ADVICE): rewrite old.→new. only OUTSIDE single-quoted
-        # string literals — a literal like 'see old.note' must survive
-        # the move verbatim (same span-skipping the system-table rewrite
-        # uses)
-        out, i, n = [], 0, len(text)
+        # r13 (ADVICE): rewrite old.→new. only OUTSIDE string literals,
+        # quoted identifiers and comments — a literal like 'see old.note'
+        # must survive the move verbatim
         pat = _re.compile(rf"\b{_re.escape(old)}\.")
-        while i < n:
-            ch = text[i]
-            if ch == "'":
-                j = i + 1
-                while j < n:
-                    if text[j] == "'" and not (j + 1 < n and text[j + 1] == "'"):
-                        break
-                    j += 2 if text[j] == "'" else 1
-                out.append(text[i : j + 1])
-                i = j + 1
-            else:
-                nxt = text.find("'", i)
-                seg = text[i:] if nxt == -1 else text[i:nxt]
-                out.append(pat.sub(f"{new}.", seg))
-                i = n if nxt == -1 else nxt
+        out, last = [], 0
+        for m in tokens(text, brackets=""):
+            out += [pat.sub(f"{new}.", text[last : m.start()]), m.group()]
+            last = m.end()
+        out.append(pat.sub(f"{new}.", text[last:]))
         return "".join(out)
 
     # r13 (ADVICE): a view over a sibling view can only be recreated

@@ -9,8 +9,18 @@ semantics (SURVEY §7 risk #2) — exactly the names this module owns.
 Everything else passes through untouched, so Catalyst sees a plain
 Spark query and every optimization applies.
 
-NOT a SQL parser: rewrites are token-aware regexes on names + literal
-patterns, which covers the reference's documented signatures.  For
+NOT a SQL parser: rewrites are regexes on names and literal patterns
+plus scans that ask one scanner (sqlscan) where brackets, argument
+commas and clause keywords are.  To that scanner string literals,
+quoted identifiers ("x" and `x`) and comments are opaque: nothing inside
+them is a bracket, separator or keyword.  translate() first replaces
+comments with a space.  The passes that must read literal text
+(date_add/date_diff units, date_format patterns, DECIMAL literals,
+bound symbols, X'..' binaries, regexp_replace references) run next,
+with literals visible.  Then one left-to-right pass masks every
+literal as a \\x00<n>\\x00 sentinel and turns every "identifier" into
+`identifier`; every later pass sees masked text, and the literals are
+put back at the end (and into any ValueError message).  For
 programmatic use the DataFrame registry (prestodb_presto_spark.functions)
 is the first-class surface.
 """
@@ -21,6 +31,19 @@ import math
 import re
 
 from prestodb_presto_spark.functions.datetime_fns import _mysql_to_java
+from prestodb_presto_spark.sqlscan import (
+    bracket_pairs,
+    close_index,
+    find_top,
+    level_end,
+    open_index,
+    replace_opaque,
+    split_top,
+    terminated,
+    tokens,
+    top_matches,
+    top_runs,
+)
 
 # Presto name -> Spark name, signature-compatible 1:1 renames.
 # (approx_distinct routes through _approx_distinct_rewrite below — the
@@ -70,54 +93,17 @@ def _rename(sql: str, presto: str, spark: str) -> str:
     return re.sub(rf"\b{presto}\s*\(", f"{spark}(", sql, flags=re.IGNORECASE)
 
 
-_STRING_LIT = re.compile(r"'(?:[^']|'')*'")
-
-
 # --- paren-aware rewrites (TRY / UNNEST / weighted approx_percentile) -------
 # These constructs need argument splitting, which token regexes can't do
-# reliably; a tiny quote/paren scanner handles them.
+# reliably; the shared scanner (sqlscan) handles them.
 
 
 def _scan_balanced(sql: str, open_idx: int) -> tuple[int, list[str]]:
-    """From ``sql[open_idx] == '('``, return (index after the matching
-    ')', top-level comma-split argument list).  Respects nested parens,
-    brackets, and single-quoted literals."""
-    depth = 0
-    args: list[str] = []
-    cur: list[str] = []
-    i = open_idx
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            cur.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch in "([":
-            depth += 1
-            if depth > 1:
-                cur.append(ch)
-        elif ch in ")]":
-            depth -= 1
-            if depth == 0:
-                args.append("".join(cur).strip())
-                return i + 1, [a for a in args if a != ""] or [""]
-            cur.append(ch)
-        elif ch == "," and depth == 1:
-            args.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    raise ValueError(f"unbalanced parentheses in SQL near offset {open_idx}")
+    """From the opening bracket at ``sql[open_idx]``, return (index after
+    the matching closer, stripped top-level comma-split argument list)."""
+    end = close_index(sql, open_idx)
+    args = [a.strip() for a in split_top(sql[open_idx + 1 : end])]
+    return end + 1, [a for a in args if a] or [""]
 
 
 def _rewrite_calls(sql: str, name: str, fn) -> str:
@@ -159,91 +145,47 @@ def _rewrite_calls_window_aware(sql: str, name: str, fn, windowed_fn) -> str:
         pos = m.start() + len(repl)
 
 
-_TOP_OPS = ("/", "*", "+", "-")
+_TOP_OP = re.compile(r"[/*+\-]")
 
 
 def _split_top_binary(expr: str) -> tuple[str, str, str] | None:
     """Split a top-level binary arithmetic expr into (lhs, op, rhs); None
     if there is no single top-level operator (or it looks unary)."""
-    depth = 0
-    i = 0
-    n = len(expr)
-    while i < n:
-        ch = expr[i]
-        if ch == "'":
-            j = expr.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and ch in _TOP_OPS:
-            lhs, rhs = expr[:i].strip(), expr[i + 1 :].strip()
-            if lhs and rhs:  # unary +/- has an empty lhs
-                return lhs, ch, rhs
-        i += 1
+    for m in top_matches(expr, _TOP_OP, words=False):
+        lhs, rhs = expr[: m.start()].strip(), expr[m.end() :].strip()
+        if lhs and rhs:  # unary +/- has an empty lhs
+            return lhs, m.group(), rhs
     return None
 
 
 _TRY_FNS = {"/": "try_divide", "*": "try_multiply", "+": "try_add", "-": "try_subtract"}
 
-_CMP_OPS = ("!=", "<>", "<=", ">=", "=", "<", ">")
+_CMP_OP = re.compile(r"!=|<>|<=|>=|=|<|>")
 
 
 def _split_top_comparison(expr: str) -> tuple[str, str, str] | None:
-    """Split at a top-level comparison operator (quote/paren aware)."""
-    depth = 0
-    i, n = 0, len(expr)
-    while i < n:
-        ch = expr[i]
-        if ch == "'":
-            j = expr.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0:
-            for op in _CMP_OPS:
-                if expr.startswith(op, i):
-                    lhs, rhs = expr[:i].strip(), expr[i + len(op) :].strip()
-                    if lhs and rhs and not lhs.endswith(("<", ">", "!", "=")):
-                        return lhs, op, rhs
-                    break
-        i += 1
+    """Split at a top-level comparison operator."""
+    for m in top_matches(expr, _CMP_OP, words=False):
+        lhs, rhs = expr[: m.start()].strip(), expr[m.end() :].strip()
+        if lhs and rhs and not lhs.endswith(("<", ">", "!", "=")):
+            return lhs, m.group(), rhs
     return None
 
 
+_BOOL_OP = re.compile(r"(?i)(?:OR|AND)\b")
+
+
 def _split_top_boolean(expr: str) -> tuple[str, str, str] | None:
-    """Split at the last top-level OR (else AND) — quote/paren aware."""
+    """Split at the last top-level OR (else the first AND)."""
     best = None
-    depth = 0
-    i, n = 0, len(expr)
-    while i < n:
-        ch = expr[i]
-        if ch == "'":
-            j = expr.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and (ch in "OoAa"):
-            m = re.match(r"(?i)(OR|AND)\b", expr[i:])
-            if m and i > 0 and not (expr[i - 1].isalnum() or expr[i - 1] == "_"):
-                op = m.group(1).upper()
-                lhs, rhs = expr[:i].strip(), expr[i + len(op) :].strip()
-                if lhs and rhs:
-                    if op == "OR":
-                        best = (lhs, op, rhs)  # OR binds loosest — prefer
-                    elif best is None:
-                        best = (lhs, op, rhs)
-                i += m.end()
-                continue
-        i += 1
+    for m in top_matches(expr, _BOOL_OP):
+        lhs, rhs = expr[: m.start()].strip(), expr[m.end() :].strip()
+        if lhs and rhs:
+            op = m.group().upper()
+            if op == "OR":
+                best = (lhs, op, rhs)  # OR binds loosest — prefer
+            elif best is None:
+                best = (lhs, op, rhs)
     return best
 
 
@@ -683,7 +625,7 @@ def _parity_agg_compat(sql: str) -> str:
                 if not sql[a_end : e - 1].strip():
                     args = [
                         x.strip()
-                        for x in _split_top_level(sql[a_open + 1 : a_end - 1])
+                        for x in split_top(sql[a_open + 1 : a_end - 1])
                     ]
                     if len(args) == 1:
                         emit(s, _approx_set_card_native(args[0]), e)
@@ -698,7 +640,7 @@ def _parity_agg_compat(sql: str) -> str:
                 ):
                     args = [
                         x.strip()
-                        for x in _split_top_level(sql[a_open + 1 : a_end - 1])
+                        for x in split_top(sql[a_open + 1 : a_end - 1])
                     ]
                     if len(args) == 1:
                         emit(s, _approx_set_card_native_dense(args[0]), e)
@@ -779,7 +721,7 @@ def _parity_agg_compat(sql: str) -> str:
             over, _oend = _over_clause(sql, e)
             if over is not None:
                 continue  # windowed sketch build: leave (fails loud)
-            args = [x.strip() for x in _split_top_level(inner_sql)]
+            args = [x.strip() for x in split_top(inner_sql)]
             if len(args) != 1:
                 emit(s, sql[s:e], e)
                 continue
@@ -787,7 +729,7 @@ def _parity_agg_compat(sql: str) -> str:
             continue
 
         if name == "create_hll":
-            args = [x.strip() for x in _split_top_level(inner_sql)]
+            args = [x.strip() for x in split_top(inner_sql)]
             if len(args) != 1:
                 emit(s, sql[s:e], e)
                 continue
@@ -816,7 +758,7 @@ def _parity_agg_compat(sql: str) -> str:
 
         # ---- approx_distinct / checksum (round-8 behavior preserved)
         over, oend = _over_clause(sql, e)
-        args = [x.strip() for x in _split_top_level(inner_sql)]
+        args = [x.strip() for x in split_top(inner_sql)]
         if name == "checksum":
             if len(args) != 1:
                 emit(s, sql[s:e], e)
@@ -1029,18 +971,7 @@ def _translate_type(t: str) -> str:
         # types (bare VARCHAR needs Spark's STRING)
         mg = re.match(r"(array|map)\s*<(.*)>\s*$", t, re.IGNORECASE | re.DOTALL)
         if mg:
-            parts, depth, buf = [], 0, ""
-            for ch in mg.group(2):
-                if ch in "<(":
-                    depth += 1
-                elif ch in ">)":
-                    depth -= 1
-                if ch == "," and depth == 0:
-                    parts.append(buf)
-                    buf = ""
-                else:
-                    buf += ch
-            parts.append(buf)
+            parts = split_top(mg.group(2), "()<>")
             if mg.group(1).lower() == "array":
                 return f"ARRAY<{_translate_type(parts[0].strip())}>"
             return (
@@ -1123,16 +1054,7 @@ def _bool_shaped(expr: str) -> bool:
     (comparison / logical operators) — boolean → integral casts must
     stay on the plain CAST path (boolean → DECIMAL is not a Spark
     coercion)."""
-    depth = 0
-    top: list[str] = []
-    for ch in expr:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0:
-            top.append(ch)
-    flat = "".join(top)
+    flat = "".join(expr[i:j] for i, j in top_runs(expr))
     if re.search(r"[<>=]", flat):
         return True
     return bool(
@@ -1232,7 +1154,6 @@ def _try_cast_rewrite(args: list[str]) -> str | None:
 _TABLESAMPLE = re.compile(
     r"\bTABLESAMPLE\s+(?:BERNOULLI|SYSTEM)\s*\(\s*([0-9.]+)\s*\)", re.IGNORECASE
 )
-_LIMIT_ALL = re.compile(r"\bLIMIT\s+ALL\b", re.IGNORECASE)
 
 _ARRAY_LIT = re.compile(r"\bARRAY\s*\[", re.IGNORECASE)
 
@@ -1413,6 +1334,7 @@ def _unnest_rewrite(sql: str) -> str:
 # _unnest_rewrite below).
 
 _VALUES_KW = re.compile(r"\bVALUES\b", re.IGNORECASE)
+_COMMA = re.compile(",")
 
 
 def _values_row_strip(sql: str) -> str:
@@ -1455,18 +1377,9 @@ def _values_row_strip(sql: str) -> str:
                 out = out[:i] + out[open_idx:]
                 i = i + (end - open_idx)
             else:
-                depth = 0
-                while i < n:
-                    ch = out[i]
-                    if ch in "([":
-                        depth += 1
-                    elif ch in ")]":
-                        if depth == 0:
-                            break
-                        depth -= 1
-                    elif ch == "," and depth == 0:
-                        break
-                    i += 1
+                # the item runs to a top-level comma or the closing paren
+                comma = find_top(out, _COMMA, i, words=False)
+                i = min(level_end(out, i), comma.start() if comma else n)
             n = len(out)
             j = i
             while j < n and out[j].isspace():
@@ -1590,13 +1503,13 @@ def _map_in_compat(sql: str) -> str:
         inner = out[lstart + 1 : lend - 1].strip()
         vm = re.match(r"(?i)VALUES\b", inner)
         if vm:
-            items = _split_top_level(inner[vm.end() :])
+            items = split_top(inner[vm.end() :])
         else:
             items = litems
         stripped = [
             it.strip()[1:-1].strip()
             if it.strip().startswith("(") and it.strip().endswith(")")
-            and not _top_level_comma(it.strip()[1:-1])
+            and len(split_top(it.strip()[1:-1])) == 1
             else it.strip()
             for it in items
         ]
@@ -1642,28 +1555,12 @@ def _no_from_select(body: str):
     """For the text after SELECT inside a parenthesized subquery: if the
     query has no FROM (or any clause beyond an optional WHERE) at depth
     0, return (select_list, where_condition_or_None); else None."""
-    depth = 0
-    i, n = 0, len(body)
-    while i < n:
-        ch = body[i]
-        if ch == "'":
-            j = body.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and (ch.isalpha() or ch == "_"):
-            m = _CLAUSE_WORD.match(body, i)
-            w = m.group(0).upper()
-            if w == "WHERE":
-                return body[:i], body[m.end() :]
-            if w in _SUBQ_CLAUSES:
-                return None
-            i = m.end()
-            continue
-        i += 1
+    for m in top_matches(body, _CLAUSE_WORD, words=False):
+        w = m.group(0).upper()
+        if w == "WHERE":
+            return body[: m.start()], body[m.end() :]
+        if w in _SUBQ_CLAUSES:
+            return None
     return body, None
 
 
@@ -1766,7 +1663,7 @@ def _trivial_scalar_subquery_collapse(sql: str) -> str:
             not item
             or item == "*"
             or re.match(r"(?i)DISTINCT\b", item)
-            or _top_level_comma(item)
+            or len(split_top(item)) > 1
             # an aggregate makes it a real one-row aggregation query
             # (SELECT count(*) WHERE c) — leave it to Spark's subquery
             or _SCALAR_AGG_RE.search(item)
@@ -1781,43 +1678,6 @@ def _trivial_scalar_subquery_collapse(sql: str) -> str:
         out = out[: m.start()] + repl + out[end:]
         # stay at the same position: the collapsed item may itself hold
         # a nested (SELECT ..) that now becomes outermost
-
-
-def _top_level_comma(expr: str) -> bool:
-    depth = 0
-    i, n = 0, len(expr)
-    while i < n:
-        ch = expr[i]
-        if ch == "'":
-            j = expr.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            return True
-        i += 1
-    return False
-
-
-def _split_top_level(text: str) -> list[str]:
-    """Split on depth-0 commas (paren/bracket aware, quote-naive callers
-    must pre-mask literals or accept comma-free literal content)."""
-    items, buf, depth = [], [], 0
-    for ch in text:
-        if ch == "," and depth == 0:
-            items.append("".join(buf))
-            buf = []
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        buf.append(ch)
-    items.append("".join(buf))
-    return items
 
 
 def _derived_scalar_wrapper_flatten(sql: str) -> str:
@@ -1856,7 +1716,7 @@ def _derived_scalar_wrapper_flatten(sql: str) -> str:
         body = out[inner_open + 1 : inner_end - 1]
         sm = re.match(r"\s*SELECT\b", body, re.IGNORECASE)
         parts = _no_from_select(body[sm.end() :])
-        if parts is None or parts[1] is not None or _top_level_comma(parts[0]):
+        if parts is None or parts[1] is not None or len(split_top(parts[0])) > 1:
             pos = m.end()
             continue
         item = parts[0].strip()
@@ -1927,42 +1787,42 @@ def _group_by_scalar_subquery_hoist(sql: str) -> str:
     hoisted column (functionally dependent on the grouping keys, since
     Presto's analyzer only admits group-key correlations here).  Fires on
     the single-table ``FROM <rel> <alias> [WHERE ..] GROUP BY`` shape."""
-    f0 = _depth0_find(sql, re.compile(r"(?i)\bFROM\b"))
+    f0 = find_top(sql, _FROM_KW)
     if f0 is None:
         return sql
     fm = re.match(
         r"(?i)FROM\s+([A-Za-z_]\w*)\s+(?:AS\s+)?([A-Za-z_]\w*)"
         r"\s+(WHERE\b|GROUP\s+BY\b)",
-        sql[f0[0] :],
+        sql[f0.start() :],
     )
     if not fm:
         return sql
     head = re.match(r"(?i)\s*SELECT\s+", sql)
-    if not head or head.end() > f0[0]:
+    if not head or head.end() > f0.start():
         return sql
     rel, alias = fm.group(1), fm.group(2)
     if alias.upper() in ("WHERE", "GROUP", "CROSS", "JOIN", "INNER", "LEFT",
                          "RIGHT", "FULL", "NATURAL", "UNION", "ORDER"):
         return sql
     # segment: select list / optional WHERE / GROUP BY items / tail
-    sel = sql[head.end() : f0[0]]
-    after = sql[f0[0] + fm.end(3) - len(fm.group(3)) :]
+    sel = sql[head.end() : f0.start()]
+    after = sql[f0.start() + fm.end(3) - len(fm.group(3)) :]
     where_txt = ""
     if fm.group(3).upper().startswith("WHERE"):
-        gm = _depth0_find(after, re.compile(r"(?i)\bGROUP\s+BY\b"))
+        gm = find_top(after, re.compile(r"(?i)\bGROUP\s+BY\b"))
         if gm is None:
             return sql
-        where_txt = after[5:gm[0]]  # text after WHERE keyword
-        after = after[gm[0] :]
+        where_txt = after[5:gm.start()]  # text after WHERE keyword
+        after = after[gm.start() :]
     gb_kw = re.match(r"(?i)GROUP\s+BY\b", after)
     if not gb_kw:
         return sql
     rest = after[gb_kw.end() :]
-    tm = _depth0_find(
+    tm = find_top(
         rest, re.compile(r"(?i)\b(HAVING|ORDER|LIMIT|UNION|INTERSECT|EXCEPT)\b")
     )
-    gb_items = rest[: tm[0]] if tm else rest
-    tail = rest[tm[0] :] if tm else ""
+    gb_items = rest[: tm.start()] if tm else rest
+    tail = rest[tm.start() :] if tm else ""
     subs = _collect_correlated_subqueries(sel + " " + gb_items, alias)
     if not subs:
         return sql
@@ -1991,33 +1851,10 @@ def _group_by_scalar_subquery_hoist(sql: str) -> str:
     ).rstrip() + ("" if not sql.endswith(" ") else " ")
 
 
-def _depth0_find(text: str, pat: re.Pattern) -> tuple[int, str] | None:
-    """(position, match text) of the first depth-0, non-quoted match."""
-    depth = 0
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            j = text.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and (ch.isalpha() or ch == "_") and (
-            i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")
-        ):
-            m = pat.match(text, i)
-            if m:
-                return i, m.group(0)
-            w = _CLAUSE_WORD.match(text, i)
-            i = w.end() if w else i + 1
-            continue
-        i += 1
-    return None
-
-
+_JOIN_KW = re.compile(r"(?i)\bJOIN\b")
+_FROM_KW = re.compile(r"(?i)FROM\b")
+_ORDER_BY = re.compile(r"(?i)ORDER\s+BY\b")
+_WHERE_END = re.compile(r"(?i)\b(GROUP|HAVING|ORDER|LIMIT|UNION|INTERSECT|EXCEPT)\b")
 _JOIN_ON_CLAUSE_END = re.compile(
     r"(?i)\b(WHERE|GROUP|HAVING|ORDER|LIMIT|UNION|INTERSECT|EXCEPT"
     r"|JOIN|INNER|LEFT|RIGHT|FULL|CROSS)\b"
@@ -2037,33 +1874,33 @@ def _join_on_subquery_compat(sql: str) -> str:
     # level: the WHERE insertion below could land in the wrong branch —
     # leave such levels untouched (subquery levels still rewrite via
     # _per_query_level)
-    if _depth0_find(sql, re.compile(r"(?i)\b(UNION|INTERSECT|EXCEPT)\b")):
+    if find_top(sql, re.compile(r"(?i)\b(UNION|INTERSECT|EXCEPT)\b")):
         return sql
     # ON→WHERE is only sound when no LATER outer join can NULL-extend
     # the columns the hoisted predicate reads
-    if _depth0_find(sql, re.compile(r"(?i)\b(RIGHT|FULL)\b")):
+    if find_top(sql, re.compile(r"(?i)\b(RIGHT|FULL)\b")):
         return sql
     out = sql
     jm_pos = 0
     pending: list[str] = []
     while True:
-        jm = _depth0_find(out[jm_pos:], re.compile(r"(?i)\bJOIN\b"))
+        jm = find_top(out, _JOIN_KW, jm_pos)
         if jm is None:
             break
-        j_at = jm_pos + jm[0]
+        j_at = jm.start()
         before = out[:j_at].rstrip()
         lead = re.search(r"(?i)\b(LEFT|RIGHT|FULL|CROSS|NATURAL|OUTER)\s*$", before)
         if lead:
             jm_pos = j_at + 4
             continue
-        om = _depth0_find(out[j_at:], re.compile(r"(?i)\bON\b"))
+        om = find_top(out, re.compile(r"(?i)\bON\b"), j_at)
         if om is None:
             jm_pos = j_at + 4
             continue
-        on_at = j_at + om[0]
+        on_at = om.start()
         cond_start = on_at + 2
-        em = _depth0_find(out[cond_start:], _JOIN_ON_CLAUSE_END)
-        cond_end = cond_start + em[0] if em else len(out)
+        em = find_top(out, _JOIN_ON_CLAUSE_END, cond_start)
+        cond_end = em.start() if em else len(out)
         cond = out[cond_start:cond_end]
         if not re.search(r"(?i)\(\s*SELECT\b|\bEXISTS\s*\(", cond):
             jm_pos = cond_end
@@ -2080,24 +1917,20 @@ def _join_on_subquery_compat(sql: str) -> str:
     if not pending:
         return sql
     conj = " AND ".join(f"({c})" for c in pending)
-    wm = _depth0_find(out, re.compile(r"(?i)\bWHERE\b"))
+    wm = find_top(out, re.compile(r"(?i)\bWHERE\b"))
     if wm is not None:
-        at = wm[0] + 5
+        at = wm.start() + 5
         return out[:at] + f" {conj} AND " + "(" + _insert_close(out, at)
-    cm = _depth0_find(
-        out, re.compile(r"(?i)\b(GROUP|HAVING|ORDER|LIMIT|UNION|INTERSECT|EXCEPT)\b")
-    )
-    at = cm[0] if cm else len(out)
+    cm = find_top(out, _WHERE_END)
+    at = cm.start() if cm else len(out)
     return out[:at].rstrip() + f" WHERE {conj} " + out[at:]
 
 
 def _insert_close(out: str, at: int) -> str:
     """Close the parenthesis opened around an existing WHERE condition:
     the original predicate runs to the end of its clause."""
-    em = _depth0_find(
-        out[at:], re.compile(r"(?i)\b(GROUP|HAVING|ORDER|LIMIT|UNION|INTERSECT|EXCEPT)\b")
-    )
-    end = at + em[0] if em else len(out)
+    em = find_top(out, _WHERE_END, at)
+    end = em.start() if em else len(out)
     return out[at:end].rstrip() + ") " + out[end:]
 
 
@@ -2111,48 +1944,18 @@ def _order_by_alias_subst(sql: str) -> str:
     head = re.match(r"(?i)\s*SELECT\s+", sql)
     if not head:
         return sql
-    depth = 0
     from_at = ob = -1
-    i, n = head.end(), len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = sql.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and (ch.isalpha() or ch == "_") and not (
-            sql[i - 1].isalnum() or sql[i - 1] == "_"
-        ):
-            m = _CLAUSE_WORD.match(sql, i)
-            w = m.group(0).upper()
-            if w == "FROM" and from_at < 0:
-                from_at = i
-            elif w == "ORDER" and re.match(r"(?i)ORDER\s+BY\b", sql[i:]):
-                ob = i
-            i = m.end()
-            continue
-        i += 1
+    for m in top_matches(sql, _CLAUSE_WORD, head.end(), "()"):
+        w = m.group(0).upper()
+        if w == "FROM" and from_at < 0:
+            from_at = m.start()
+        elif w == "ORDER" and re.match(r"(?i)ORDER\s+BY\b", sql[m.start() :]):
+            ob = m.start()
     if from_at < 0 or ob < 0:
         return sql
     aliases: dict[str, str] = {}
     outputs: set[str] = set()
-    sel_items, buf, d = [], [], 0
-    for ch in sql[head.end() : from_at]:
-        if ch == "," and d == 0:
-            sel_items.append("".join(buf))
-            buf = []
-            continue
-        if ch in "([":
-            d += 1
-        elif ch in ")]":
-            d -= 1
-        buf.append(ch)
-    sel_items.append("".join(buf))
-    for item in sel_items:
+    for item in split_top(sql[head.end() : from_at]):
         am = re.fullmatch(
             r"\s*([A-Za-z_]\w*)\s+AS\s+([A-Za-z_]\w*)\s*", item, re.IGNORECASE
         )
@@ -2184,7 +1987,7 @@ def _order_by_alias_subst(sql: str) -> str:
 def _select_item_names(sel: str) -> list[str] | None:
     """Output names of a select list where every item is a bare column or
     aliased expression; None when any item is unnamed/wildcard."""
-    items = _split_top_level(sel)
+    items = split_top(sel)
     names = []
     for part in items:
         am = re.search(r"(?i)\s+AS\s+([A-Za-z_]\w*)\s*$", part)
@@ -2206,18 +2009,18 @@ def _using_join_wildcard_compat(sql: str) -> str:
     wildcards to the explicit non-using columns."""
     if not re.search(r"(?i)\bUSING\s*\(", sql):
         return sql
-    fm = _depth0_find(sql, re.compile(r"(?i)\bFROM\b"))
+    fm = find_top(sql, _FROM_KW)
     head = re.match(r"(?i)\s*SELECT\s+", sql)
-    if fm is None or head is None or fm[0] < head.end():
+    if fm is None or head is None or fm.start() < head.end():
         return sql
-    sel = sql[head.end() : fm[0]]
+    sel = sql[head.end() : fm.start()]
     if not re.search(r"\b[A-Za-z_]\w*\s*\.\s*\*", sel):
         return sql
     # FROM ( .. ) a JOIN ( .. ) b USING (cols)
-    m = re.match(r"(?i)FROM\s*\(", sql[fm[0] :])
+    m = re.match(r"(?i)FROM\s*\(", sql[fm.start() :])
     if not m:
         return sql
-    o1 = fm[0] + m.end() - 1
+    o1 = fm.start() + m.end() - 1
     e1, _ = _scan_balanced(sql, o1)
     a1 = re.match(r"\s*(?:AS\s+)?([A-Za-z_]\w*)\s+JOIN\s*\(", sql[e1:],
                   re.IGNORECASE)
@@ -2238,10 +2041,10 @@ def _using_join_wildcard_compat(sql: str) -> str:
         sm = re.match(r"(?i)\s*SELECT\s+", body)
         if not sm:
             return sql
-        fm2 = _depth0_find(body, re.compile(r"(?i)\bFROM\b"))
+        fm2 = find_top(body, _FROM_KW)
         if fm2 is None:
             return sql
-        cols = _select_item_names(body[sm.end() : fm2[0]])
+        cols = _select_item_names(body[sm.end() : fm2.start()])
         if cols is None:
             return sql
         names[alias.lower()] = cols
@@ -2255,7 +2058,7 @@ def _using_join_wildcard_compat(sql: str) -> str:
         return ", ".join(f"{al}.{c}" for c in keep) if keep else wm.group(0)
 
     new_sel = re.sub(r"\b([A-Za-z_]\w*)\s*\.\s*\*", expand, sel)
-    return sql[: head.end()] + new_sel + sql[fm[0] :]
+    return sql[: head.end()] + new_sel + sql[fm.start() :]
 
 
 def _order_by_mixed_scope_compat(sql: str) -> str:
@@ -2267,32 +2070,32 @@ def _order_by_mixed_scope_compat(sql: str) -> str:
     ``__sc_a``), leaving a single-scope ORDER BY the subquery/window
     hoist can then process.  Narrow shape: single aliased relation, all
     select items named, no grouping."""
-    ob_m = _depth0_find(sql, re.compile(r"(?i)\bORDER\s+BY\b"))
+    ob_m = find_top(sql, _ORDER_BY)
     head = re.match(r"(?i)\s*SELECT\s+", sql)
-    f0 = _depth0_find(sql, re.compile(r"(?i)\bFROM\b"))
-    if ob_m is None or head is None or f0 is None or f0[0] < head.end():
+    f0 = find_top(sql, _FROM_KW)
+    if ob_m is None or head is None or f0 is None or f0.start() < head.end():
         return sql
-    middle = sql[f0[0] : ob_m[0]]
+    middle = sql[f0.start() : ob_m.start()]
     if re.search(r"(?i)\b(GROUP|HAVING|DISTINCT|JOIN|UNION|LIMIT)\b", middle):
         return sql
     # FROM relation + alias: `name alias` or `( .. ) alias[(cols)]`
     rel_m = re.match(
-        r"(?i)FROM\s+(?:([A-Za-z_]\w*)|(\())", sql[f0[0] :]
+        r"(?i)FROM\s+(?:([A-Za-z_]\w*)|(\())", sql[f0.start() :]
     )
     if not rel_m:
         return sql
     if rel_m.group(2):
-        rend, _ = _scan_balanced(sql, f0[0] + rel_m.start(2))
+        rend, _ = _scan_balanced(sql, f0.start() + rel_m.start(2))
         am = re.match(r"\s*(?:AS\s+)?([A-Za-z_]\w*)", sql[rend:], re.IGNORECASE)
     else:
-        rend = f0[0] + rel_m.end(1)
+        rend = f0.start() + rel_m.end(1)
         am = re.match(r"\s*(?:AS\s+)?([A-Za-z_]\w*)", sql[rend:], re.IGNORECASE)
     if not am or am.group(1).upper() in ("WHERE", "ORDER"):
         return sql
     alias = am.group(1)
     # select list: every item must be named
-    sel = sql[head.end() : f0[0]]
-    items = _split_top_level(sel)
+    sel = sql[head.end() : f0.start()]
+    items = split_top(sel)
     names = []
     for part in items:
         am2 = re.search(r"(?i)\s+AS\s+([A-Za-z_]\w*)\s*$", part)
@@ -2305,7 +2108,7 @@ def _order_by_mixed_scope_compat(sql: str) -> str:
     out_names = {n.lower() for n, _ in names}
     # qualified input refs in the ORDER BY tail whose bare name is a
     # SHADOWED output alias (projected expression differs from the col)
-    tail = sql[ob_m[0] :]
+    tail = sql[ob_m.start() :]
     needed = []
     qualified_all = []
     for qm in re.finditer(
@@ -2332,7 +2135,7 @@ def _order_by_mixed_scope_compat(sql: str) -> str:
     inner_extra = ", ".join(
         f"{alias}.{col} AS __sc_{col.lower()}" for col in needed
     )
-    inner = f"SELECT {sel.strip()}, {inner_extra} {sql[f0[0]:ob_m[0]].strip()}"
+    inner = f"SELECT {sel.strip()}, {inner_extra} {sql[f0.start():ob_m.start()].strip()}"
     new_tail = tail
     for col in needed:
         new_tail = re.sub(
@@ -2352,45 +2155,16 @@ def _order_by_subquery_hoist(sql: str) -> str:
     reference uses: a bare-identifier select list, no GROUP BY/DISTINCT,
     top-level ORDER BY."""
     # the LAST depth-0 ORDER BY of the statement
-    depth = 0
     ob = -1
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = sql.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "Oo":
-            m = re.match(r"(?i)ORDER\s+BY\b", sql[i:])
-            if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-                ob = i
-                i += m.end()
-                continue
-        i += 1
+    for m in top_matches(sql, _ORDER_BY, brackets="()"):
+        ob = m.start()
     if ob < 0:
         return sql
     tail_m = re.search(r"(?i)\b(LIMIT|OFFSET|FETCH)\b", sql[ob:])
-    items_end = ob + tail_m.start() if tail_m else n
+    items_end = ob + tail_m.start() if tail_m else len(sql)
     items_text = sql[ob:items_end]
     items_text = re.sub(r"(?i)^ORDER\s+BY", "", items_text)
-    items = []
-    buf, depth = [], 0
-    for ch in items_text:
-        if ch == "," and depth == 0:
-            items.append("".join(buf))
-            buf = []
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        buf.append(ch)
-    items.append("".join(buf))
+    items = split_top(items_text)
     if not any(
         re.search(r"(?i)EXISTS\s*\(|\(\s*SELECT\b|\bOVER\s*\(|\bgrouping\s*\(", it)
         for it in items
@@ -2399,21 +2173,10 @@ def _order_by_subquery_hoist(sql: str) -> str:
     head_m = re.match(r"(?i)\s*SELECT\s+", sql)
     if not head_m:
         return sql
-    from_m = None
-    depth = 0
-    for k in range(head_m.end(), ob):
-        ch = sql[k]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "Ff":
-            fm = re.match(r"(?i)FROM\b", sql[k:])
-            if fm and not (sql[k - 1].isalnum() or sql[k - 1] == "_"):
-                from_m = k
-                break
-    if from_m is None:
+    fm = find_top(sql[:ob], _FROM_KW, head_m.end(), "()")
+    if fm is None:
         return sql
+    from_m = fm.start()
     sel = sql[head_m.end() : from_m].strip()
     star = sel == "*"
     bare = bool(
@@ -2434,19 +2197,7 @@ def _order_by_subquery_hoist(sql: str) -> str:
     names = []
     mixed = False  # an unnamed expression item (incl. a *) in the list
     if not star:
-        sel_parts, buf, d = [], [], 0
-        for ch in sel:
-            if ch == "," and d == 0:
-                sel_parts.append("".join(buf))
-                buf = []
-                continue
-            if ch in "([":
-                d += 1
-            elif ch in ")]":
-                d -= 1
-            buf.append(ch)
-        sel_parts.append("".join(buf))
-        for part in sel_parts:
+        for part in split_top(sel):
             am = re.search(r"(?i)\s+AS\s+([A-Za-z_]\w*)\s*$", part)
             if am:
                 names.append(am.group(1))
@@ -2608,20 +2359,8 @@ def _values_lambda_compat(sql: str) -> str:
         if "->" not in body:
             pos = end
             continue
-        rows, buf, d = [], [], 0
-        for ch in body:
-            if ch == "," and d == 0:
-                rows.append("".join(buf))
-                buf = []
-                continue
-            if ch in "([":
-                d += 1
-            elif ch in ")]":
-                d -= 1
-            buf.append(ch)
-        rows.append("".join(buf))
         selects = []
-        for r in rows:
+        for r in split_top(body):
             r = r.strip()
             if r.startswith("(") and r.endswith(")"):
                 e, _args = _scan_balanced(r, 0)
@@ -2642,33 +2381,22 @@ def _clause_at(sql: str, pos: int) -> str | None:
     """The SQL clause ('select' = projection list, 'from', 'where', …)
     the position belongs to, via a depth-stacked keyword scan."""
     stack: list[str | None] = [None]
-    i = 0
-    while i < pos:
-        ch = sql[i]
-        if ch == "'":
-            j = sql.find("'", i + 1)
-            i = (j if j != -1 else len(sql)) + 1
-            continue
-        if ch == "(":
+    for m in tokens(sql, 0, "()", words=True):
+        if m.start() >= pos:
+            break
+        kind = m.lastgroup
+        if kind == "open":
             stack.append(None)
-            i += 1
-            continue
-        if ch == ")":
+        elif kind == "close":
             if len(stack) > 1:
                 stack.pop()
-            i += 1
-            continue
-        if ch.isalpha() or ch == "_":
-            m = _CLAUSE_WORD.match(sql, i)
-            w = m.group(0).upper()
+        elif kind == "word":
+            w = m.group().upper()
             if w == "SELECT":
                 stack[-1] = "select"
             elif w in ("FROM", "WHERE", "GROUP", "HAVING", "ORDER",
                        "LIMIT", "WINDOW"):
                 stack[-1] = w.lower()
-            i = m.end()
-            continue
-        i += 1
     return stack[-1]
 
 
@@ -2774,8 +2502,11 @@ def _empty_grouping_sets_compat(sql: str) -> str:
     kind = m.group(1).upper()
     open_idx = sql.index("(", m.end() - 1)
     end, sets_raw = _scan_balanced(sql, open_idx)
-    if sql[end:].strip():
-        return sql  # only the trailing-clause shape
+    # only the trailing-clause shape; LIMIT ALL limits nothing, so it
+    # may stay behind the UNION ALL
+    tail = sql[end:]
+    if tail.strip() and not re.fullmatch(r"(?i)\s*LIMIT\s+ALL\s*", tail):
+        return sql
     if kind.startswith("GROUPING"):
         sets = [s.strip() for s in sets_raw]
     else:
@@ -2801,34 +2532,12 @@ def _empty_grouping_sets_compat(sql: str) -> str:
     if not head_m:
         return sql
     gb = m.start()
-    depth = 0
-    from_at = None
-    for k in range(head_m.end(), gb):
-        ch = sql[k]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "Ff" and re.match(r"(?i)FROM\b", sql[k:]) \
-                and not (sql[k - 1].isalnum() or sql[k - 1] == "_"):
-            from_at = k
-            break
-    if from_at is None:
+    fm = find_top(sql[:gb], _FROM_KW, head_m.end(), "()")
+    if fm is None:
         return sql
+    from_at = fm.start()
     sel = sql[head_m.end() : from_at].strip()
-    items = []
-    buf, depth = [], 0
-    for ch in sel:
-        if ch == "," and depth == 0:
-            items.append("".join(buf))
-            buf = []
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        buf.append(ch)
-    items.append("".join(buf))
+    items = split_top(sel)
     # grand-total branch: grouping columns render NULL; aggregates and
     # constant items (literals/masked placeholders — `SELECT 1, count(*)`)
     # keep their value, exactly as Presto's grand-total row does
@@ -2849,31 +2558,7 @@ def _empty_grouping_sets_compat(sql: str) -> str:
             f"({', '.join(nonempty)})"
         )
     parts.extend([global_q] * len(empties))
-    return " UNION ALL ".join(parts)
-
-
-def _depth0_search(text: str, pat: re.Pattern) -> bool:
-    depth = 0
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            j = text.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and (ch.isalpha() or ch == "_"):
-            m = pat.match(text, i)
-            if m and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")):
-                return True
-            w = _CLAUSE_WORD.match(text, i)
-            i = w.end() if w else i + 1
-            continue
-        i += 1
-    return False
+    return " UNION ALL ".join(parts) + tail.rstrip()
 
 
 _GS_KW = re.compile(r"(?i)GROUPING\s+SETS|CUBE\s*\(|ROLLUP\s*\(")
@@ -2896,31 +2581,19 @@ def _grouping_plain_scope_fold(sql: str) -> str:
         open_idx = out.index("(", start + 8)
         end, _ = _scan_balanced(out, open_idx)
         # innermost→outermost enclosing paren spans containing the call
-        spans = []
-        stack = []
-        i, n = 0, len(out)
-        while i < n:
-            ch = out[i]
-            if ch == "'":
-                j = out.find("'", i + 1)
-                i = (j if j != -1 else n) + 1
-                continue
-            if ch == "(":
-                stack.append(i)
-            elif ch == ")":
-                if stack:
-                    s = stack.pop()
-                    if s < start and i >= end:
-                        spans.append((s + 1, i))
-            i += 1
+        spans = [
+            (o + 1, c)
+            for o, c in bracket_pairs(out, "()")
+            if o < start and c >= end
+        ]
         spans.sort(key=lambda se: se[1] - se[0])
-        spans.append((0, n))
+        spans.append((0, len(out)))
         block = None
         for s, e in spans:
-            if _depth0_search(out[s:e], _SELECT_KW):
+            if find_top(out[s:e], _SELECT_KW, brackets="()"):
                 block = (s, e)
                 break
-        if block and not _depth0_search(out[block[0] : block[1]], _GS_KW):
+        if block and not find_top(out[block[0] : block[1]], _GS_KW, brackets="()"):
             out = out[:start] + "0" + out[end:]
             pos = start + 1
         else:
@@ -2968,7 +2641,7 @@ def _grouping_product_distinct(body: str) -> str:
     dedupe as column sets, and render a GROUPING SETS list."""
     from itertools import combinations, product
 
-    items = _split_top_level(body)
+    items = split_top(body)
 
     def factors(item: str) -> list[list[str]]:
         im = re.match(r"(?i)\s*(ROLLUP|CUBE|GROUPING\s+SETS)\s*\(", item)
@@ -3029,12 +2702,13 @@ def _group_by_distinct_compat(sql: str) -> str:
             # (StatementAnalyzer analyzeGroupBy + setQuantifier).  With
             # ROLLUP/CUBE present the product must be expanded statically
             # to deduped GROUPING SETS; plain keys just drop DISTINCT.
-            endm = _depth0_find(
-                out[m.end() :],
+            endm = find_top(
+                out,
                 re.compile(r"(?i)\b(HAVING|ORDER|LIMIT|UNION|INTERSECT"
                            r"|EXCEPT|WINDOW|OFFSET|FETCH)\b"),
+                m.end(),
             )
-            body_end = m.end() + (endm[0] if endm else len(out) - m.end())
+            body_end = endm.start() if endm else len(out)
             body = out[m.end() : body_end]
             if not re.search(r"(?i)\b(ROLLUP|CUBE|GROUPING\s+SETS)\s*\(", body):
                 out = out[: m.start()] + "GROUP BY " + out[m.end() :]
@@ -3235,16 +2909,8 @@ def _left_operand_start(s: str, end: int) -> int:
         while j > 0 and (s[j - 1].isalnum() or s[j - 1] in "_.$\x00"):
             j -= 1
         if j > 0 and s[j - 1] in ")]":
-            close, open_ = (")", "(") if s[j - 1] == ")" else ("]", "[")
-            depth = 0
-            while j > 0:
-                j -= 1
-                if s[j] == close:
-                    depth += 1
-                elif s[j] == open_:
-                    depth -= 1
-                    if depth == 0:
-                        break
+            pair = "()" if s[j - 1] == ")" else "[]"
+            j = max(open_index(s, j - 1, pair), 0)
             continue  # absorb the call name / subscript base / chain
         break
     # a masked literal may carry a typed-literal keyword prefix
@@ -3537,16 +3203,11 @@ def _rev_array_span(s: str) -> int | None:
     t = s.rstrip()
     if not t.endswith(")"):
         return None
-    depth = 0
-    for i in range(len(t) - 1, -1, -1):
-        if t[i] == ")":
-            depth += 1
-        elif t[i] == "(":
-            depth -= 1
-            if depth == 0:
-                m = re.search(r"\barray\s*$", t[:i], re.IGNORECASE)
-                return m.start() if m else None
-    return None
+    i = open_index(t, len(t) - 1, "()")
+    if i < 0:
+        return None
+    m = re.search(r"\barray\s*$", t[:i], re.IGNORECASE)
+    return m.start() if m else None
 
 
 def _all_nested(arr: str) -> bool | None:
@@ -3791,27 +3452,6 @@ _REL_KEYWORDS = re.compile(
 )
 
 
-def _depth0_join(inner: str) -> bool:
-    depth = 0
-    i, n = 0, len(inner)
-    while i < n:
-        ch = inner[i]
-        if ch == "'":
-            j = inner.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "Jj" and re.match(
-            r"(?i)JOIN\b", inner[i:]
-        ) and (i == 0 or not (inner[i - 1].isalnum() or inner[i - 1] == "_")):
-            return True
-        i += 1
-    return False
-
-
 def _from_join_parens_strip(sql: str) -> str:
     """``FROM (a JOIN b ...)`` — Presto's grammar allows a parenthesized
     join relation (SqlBase.g4 relation); Spark's does not (the UNNEST
@@ -3829,7 +3469,9 @@ def _from_join_parens_strip(sql: str) -> str:
         end, _ = _scan_balanced(out, open_idx)
         inner = out[open_idx + 1 : end - 1]
         lead = inner.lstrip()
-        if re.match(r"(?i)(SELECT|VALUES|WITH|TABLE)\b", lead) or not _depth0_join(inner):
+        if re.match(r"(?i)(SELECT|VALUES|WITH|TABLE)\b", lead) or not find_top(
+            inner, _JOIN_KW, brackets="()"
+        ):
             pos = end
             continue
         rest = out[end:].lstrip()
@@ -3848,28 +3490,21 @@ def _from_join_parens_strip(sql: str) -> str:
 def _subscript_compat(sql: str) -> str:
     out = sql
     while True:
-        idx = None
-        for m in re.finditer(r"\[", out):
-            j = m.start()
-            if j == 0:
-                continue
-            prev = out[j - 1]
-            if prev.isalnum() or prev in ")]_\x00":
-                idx = j
-                break
+        idx = next(
+            (
+                m.start()
+                for m in tokens(out, 0, "[]")
+                if m.lastgroup == "open"
+                and m.start() > 0
+                and (out[m.start() - 1].isalnum() or out[m.start() - 1] in ")]_\x00")
+            ),
+            None,
+        )
         if idx is None:
             return out
-        depth = 0
-        k = idx
-        while k < len(out):
-            if out[k] == "[":
-                depth += 1
-            elif out[k] == "]":
-                depth -= 1
-                if depth == 0:
-                    break
-            k += 1
-        if depth != 0:
+        try:
+            k = close_index(out, idx, "[]")
+        except ValueError:
             return out
         start = _left_operand_start(out, idx)
         base = out[start:idx]
@@ -4166,16 +3801,7 @@ def _forward_operand_end(s: str, start: int) -> int:
     while j < n and (s[j].isalnum() or s[j] in "_.$"):
         j += 1
     if j < n and s[j] == "(":
-        depth = 0
-        while j < n:
-            if s[j] == "(":
-                depth += 1
-            elif s[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    j += 1
-                    break
-            j += 1
+        j = min(level_end(s, j + 1, "()") + 1, n)
     return j
 
 
@@ -5783,8 +5409,9 @@ def _skewness_rewrite(args: list[str]) -> str | None:
 # presto-parser); Spark defaults are the exact opposite.  Make every
 # ORDER BY key's null placement explicit unless the query already did.
 _ORDER_BY_KW = re.compile(r"\border\s+by\b", re.IGNORECASE)
-_OB_TERM = re.compile(
-    r"^(limit|offset|fetch|rows|range|groups|union|intersect|except|window)\b",
+_OB_STOP = re.compile(
+    r";|(?<![\w$])"
+    r"(?:limit|offset|fetch|rows|range|groups|union|intersect|except|window)\b",
     re.IGNORECASE,
 )
 _HAS_NULLS = re.compile(r"\bnulls\s+(first|last)\s*$", re.IGNORECASE)
@@ -5798,31 +5425,17 @@ def _order_by_nulls(sql: str) -> str:
         m = _ORDER_BY_KW.search(out, pos)
         if not m:
             return out
-        i, n = m.end(), len(out)
+        # the sort items end at a closing paren, a ``;`` or a clause
+        # keyword, all at depth 0
+        start = m.end()
+        end = level_end(out, start)
+        stop = find_top(out, _OB_STOP, start, words=False)
+        if stop and stop.start() < end:
+            end = stop.start()
         items: list[tuple[int, int]] = []  # (start, end) spans
-        start, depth = i, 0
-        while i < n:
-            ch = out[i]
-            if ch == "\x00":  # masked literal: skip to closing sentinel
-                i = out.index("\x00", i + 1) + 1
-                continue
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif ch == ";" and depth == 0:
-                break
-            elif ch == "," and depth == 0:
-                items.append((start, i))
-                start = i + 1
-            elif depth == 0 and (ch.isalpha()) and _OB_TERM.match(out[i:]):
-                # keyword terminators only count at a word boundary
-                if i == 0 or not (out[i - 1].isalnum() or out[i - 1] in "_$"):
-                    break
-            i += 1
-        items.append((start, i))
+        for part in split_top(out[start:end]):
+            items.append((start, start + len(part)))
+            start += len(part) + 1
         # rewrite items back-to-front so earlier spans stay valid
         for s, e in reversed(items):
             item = out[s:e]
@@ -6210,57 +5823,49 @@ _BOUND_SYMBOLS = {
 
 
 def _strip_comments(sql: str) -> str:
-    """Replace ``--``/``/* */`` comments (outside string literals) with a
-    space.  Comments are whitespace to the grammar (SqlBase.g4
-    SIMPLE_COMMENT / BRACKETED_COMMENT), but every depth/keyword scanner
-    below would otherwise read keywords inside them."""
-    parts: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            parts.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch == '"':
-            # a quoted identifier span ("a--b") — its content is not a
-            # comment; doubled "" escapes a quote inside, like literals
-            j = i + 1
-            while j < n:
-                if sql[j] == '"':
-                    if j + 1 < n and sql[j + 1] == '"':
-                        j += 2
-                        continue
-                    break
-                j += 1
-            parts.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "-" and sql[i : i + 2] == "--":
-            j = sql.find("\n", i)
-            parts.append(" ")
-            i = n if j == -1 else j  # keep the newline itself
-            continue
-        if ch == "/" and sql[i : i + 2] == "/*":
-            j = sql.find("*/", i + 2)
-            parts.append(" ")
-            i = n if j == -1 else j + 2
-            continue
-        parts.append(ch)
-        i += 1
-    return "".join(parts)
+    """Replace ``--``/``/* */`` comments with a space.  Comments are
+    whitespace to the grammar (SqlBase.g4 SIMPLE_COMMENT /
+    BRACKETED_COMMENT), but every keyword pass below would otherwise
+    read keywords inside them."""
+    return replace_opaque(sql, lambda span: " " if span[0] in "-/" else None)
+
+
+def _mask_quoted(sql: str, literals: list[str]) -> str:
+    """One left-to-right pass over the quoted spans: each string literal
+    moves to ``literals`` and leaves a ``\\x00<index>\\x00`` sentinel, so
+    no rewrite below can touch quoted text; each ``"identifier"`` becomes
+    Spark's `` `identifier` `` (Presto double quotes are always
+    identifiers, never strings).  Unterminated spans stay as they are."""
+
+    def mask(span: str) -> str | None:
+        if span[0] == "'" and terminated(span):
+            literals.append(span)
+            return f"\x00{len(literals) - 1}\x00"
+        if span[0] == '"' and len(span) > 2 and terminated(span):
+            name = span[1:-1].replace('""', '"').replace("`", "``")
+            return f"`{name}`"
+        return None
+
+    return replace_opaque(sql, mask)
+
+
+def _unmask(text: str, literals: list[str]) -> str:
+    return re.sub(r"\x00(\d+)\x00", lambda m: literals[int(m.group(1))], text)
 
 
 def translate(sql: str) -> str:
     """Presto-dialect SQL → Spark SQL."""
+    literals: list[str] = []
+    try:
+        return _translate(sql, literals)
+    except ValueError as e:
+        # a pass's message may quote masked text: show the literals
+        if "\x00" not in str(e):
+            raise
+        raise ValueError(_unmask(str(e), literals)) from e
+
+
+def _translate(sql: str, literals: list[str]) -> str:
     # Comments are whitespace; strip them first so no scanner below can
     # read keywords inside them
     sql = _strip_comments(sql)
@@ -6301,19 +5906,10 @@ def translate(sql: str) -> str:
     # pre-masking pass: ${name} replacement references need to read the
     # pattern and replacement literals
     out = _rewrite_calls(out, "regexp_replace", _regexp_named_refs_rewrite)
-    # mask literals so no rewrite below can touch quoted text
-    literals: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        literals.append(m.group(0))
-        return f"\x00{len(literals) - 1}\x00"
-
-    out = _STRING_LIT.sub(_mask, out)
-    # Presto double-quotes are ALWAYS identifiers (never strings) —
-    # Spark's identifier quote is the backtick.  Runs after literal
-    # masking so quotes inside string literals stay untouched; covers
-    # quoted function names too ("sum"(x) → `sum`(x), which Spark parses).
-    out = re.sub(r'"([^"]+)"', r"`\1`", out)
+    # mask literals so no rewrite below can touch quoted text; quoted
+    # function names become identifiers too ("sum"(x) → `sum`(x), which
+    # Spark parses)
+    out = _mask_quoted(out, literals)
     # Presto CREATE [OR REPLACE] VIEW is a catalog view
     # (presto-parser/.../CreateView.java); the Spark analog over session
     # temp views is a TEMPORARY view (a permanent Spark view cannot
@@ -6326,7 +5922,6 @@ def translate(sql: str) -> str:
         flags=re.IGNORECASE,
     )
     out = _TABLESAMPLE.sub(lambda m: f"TABLESAMPLE ({m.group(1)} PERCENT)", out)
-    out = _LIMIT_ALL.sub("", out)
     # paren-aware constructs (argument-splitting scanners)
     out = _array_literals(out)
     out = _element_array_concat(out, literals)
@@ -6641,11 +6236,7 @@ def translate(sql: str) -> str:
     # longest names first so json_extract_scalar wins over json_extract
     for presto in sorted(_RENAMES, key=len, reverse=True):
         out = _rename(out, presto, _RENAMES[presto])
-    return re.sub(
-        r"\x00(\d+)\x00",
-        lambda m: _spark_safe_literal(literals[int(m.group(1))]),
-        out,
-    )
+    return _unmask(out, [_spark_safe_literal(lit) for lit in literals])
 
 
 def _spark_safe_literal(lit: str) -> str:

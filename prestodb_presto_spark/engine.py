@@ -18,6 +18,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prestodb_presto_spark.sqlscan import split_top, tokens
+
 TABLES = (
     "region",
     "nation",
@@ -766,23 +768,9 @@ class Engine:
             raise ValueError(f"CALL arguments must be literals, got: {v!r}")
 
         # split top-level commas (string literals may hold commas)
-        parts: list[str] = []
-        depth, cur, in_str = 0, [], False
-        for ch in argtext:
-            if ch == "'":
-                in_str = not in_str
-            if not in_str:
-                if ch in "([":
-                    depth += 1
-                elif ch in ")]":
-                    depth -= 1
-                elif ch == "," and depth == 0:
-                    parts.append("".join(cur))
-                    cur = []
-                    continue
-            cur.append(ch)
-        if "".join(cur).strip():
-            parts.append("".join(cur))
+        parts = split_top(argtext)
+        if not parts[-1].strip():
+            parts.pop()
 
         named = [p for p in parts if "=>" in p.split("'", 1)[0]]
         if named and len(named) != len(parts):
@@ -949,11 +937,10 @@ class Engine:
 
     @staticmethod
     def _count_params(text: str) -> int:
-        """Count positional `?` markers outside single-quoted literals
-        (a '?' inside a string literal is text, not a parameter)."""
-        from prestodb_presto_spark.dialect import _STRING_LIT
-
-        return _STRING_LIT.sub("", text).count("?")
+        """Count positional `?` markers outside literals, quoted
+        identifiers and comments (a '?' there is text, not a parameter)."""
+        quoted = sum(text.count("?", *m.span()) for m in tokens(text, brackets=""))
+        return text.count("?") - quoted
 
     def describe_output(self, name: str) -> DataFrame:
         """DESCRIBE OUTPUT <name> (tree/DescribeOutput.java;

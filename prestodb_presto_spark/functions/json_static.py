@@ -27,6 +27,8 @@ import math
 import re
 from decimal import ROUND_HALF_UP, Decimal, localcontext
 
+from prestodb_presto_spark.sqlscan import close_index, split_top
+
 __all__ = [
     "parse_literal_expr",
     "render_presto_json",
@@ -108,34 +110,6 @@ _NUM = re.compile(r"^[-+]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$")
 _MASK = re.compile(r"^\x00(\d+)\x00$")
 
 
-def _scan_balanced(sql: str, open_idx: int):
-    # local copy of dialect._scan_balanced semantics (args split)
-    depth = 0
-    args: list[str] = []
-    buf = ""
-    i = open_idx
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "(" or ch == "[":
-            depth += 1
-            if depth > 1:
-                buf += ch
-        elif ch == ")" or ch == "]":
-            depth -= 1
-            if depth == 0:
-                args.append(buf)
-                return i + 1, args
-            buf += ch
-        elif ch == "," and depth == 1:
-            args.append(buf)
-            buf = ""
-        else:
-            buf += ch
-        i += 1
-    raise ValueError("unbalanced")
-
-
 def parse_literal_expr(text: str, literals: list[str]):
     """Literal constructor expression → value tree, or None."""
     t = text.strip()
@@ -194,9 +168,10 @@ def parse_literal_expr(text: str, literals: list[str]):
     cm = re.match(r"^(?:TRY_)?CAST\s*\(", t, re.IGNORECASE)
     if cm:
         try:
-            end, args = _scan_balanced(t, t.index("("))
+            end = close_index(t, cm.end() - 1) + 1
         except ValueError:
             return None
+        args = split_top(t[cm.end() : end - 1])
         if end != len(t) or not args:
             return None
         # MAP<K, V> angle generics carry commas the scanner splits on
@@ -230,9 +205,10 @@ def parse_literal_expr(text: str, literals: list[str]):
         if not mm:
             return None
         try:
-            end, args = _scan_balanced(t, mm.end() - 1)
+            end = close_index(t, mm.end() - 1) + 1
         except ValueError:
             return None
+        args = split_top(t[mm.end() : end - 1])
         if end != len(t):
             return None
         if len(args) == 1 and not args[0].strip():
@@ -254,9 +230,10 @@ def parse_literal_expr(text: str, literals: list[str]):
     mp = re.match(r"^MAP(?:_FROM_ARRAYS)?\s*\(", t, re.IGNORECASE)
     if mp:
         try:
-            end, args = _scan_balanced(t, mp.end() - 1)
+            end = close_index(t, mp.end() - 1) + 1
         except ValueError:
             return None
+        args = split_top(t[mp.end() : end - 1])
         if end != len(t):
             return None
         if len(args) == 1 and not args[0].strip():
@@ -452,29 +429,13 @@ _SCALARS = {
 }
 
 
-def _split_type_args(s: str) -> list[str]:
-    parts, depth, buf = [], 0, ""
-    for ch in s:
-        if ch in "(<":
-            depth += 1
-        elif ch in ")>":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append(buf)
-            buf = ""
-        else:
-            buf += ch
-    parts.append(buf)
-    return parts
-
-
 def parse_type(t: str):
     t = t.strip()
     low = t.lower()
     m = re.match(r"^(array|map|row)\s*[(<](.*)[)>]\s*$", t, re.IGNORECASE | re.DOTALL)
     if m:
         kind, inner = m.group(1).lower(), m.group(2)
-        args = _split_type_args(inner)
+        args = split_top(inner, "()<>")
         if kind == "array":
             et = parse_type(args[0])
             return ("array", et) if et else None

@@ -41,12 +41,35 @@ def engine(spark):
 _REFERENCE_ABSENT = "reference checkout absent"
 
 
+def _absent_reason(path: str) -> str | None:
+    if os.path.exists(path):
+        return None
+    return f"{_REFERENCE_ABSENT}: {path} not found"
+
+
 def require_reference(*paths: str) -> None:
     """Skip the calling test or fixture when any of ``paths`` (inputs
     read from the reference checkout) does not exist."""
     for path in paths:
-        if not os.path.exists(path):
-            pytest.skip(f"{_REFERENCE_ABSENT}: {path} not found")
+        reason = _absent_reason(path)
+        if reason:
+            pytest.skip(reason)
+
+
+def parametrize_reference(argnames: str, path: str, cases, ids):
+    """``pytest.mark.parametrize`` over ``cases`` read from ``path`` in
+    the reference checkout.  Without the checkout the suite gets one
+    case, skipped with require_reference's reason before any fixture
+    runs, so it is counted at session end instead of collecting
+    nothing."""
+    reason = _absent_reason(path)
+    if reason is None:
+        return pytest.mark.parametrize(argnames, cases, ids=ids)
+    nargs = len(argnames.split(","))
+    absent = pytest.param(
+        *[None] * nargs, id="reference-absent", marks=pytest.mark.skip(reason=reason)
+    )
+    return pytest.mark.parametrize(argnames, [absent])
 
 
 def pytest_terminal_summary(terminalreporter):

@@ -19,6 +19,7 @@ import re
 
 import pytest
 
+from tests.conftest import parametrize_reference
 from tests.test_reference_sql_suites import (
     DATATYPE_COLS,
     DATATYPE_ROWS_SQL,
@@ -93,7 +94,9 @@ def insert_env(engine, oracle):
     spark.catalog.dropTempView("datatype")
 
 
-@pytest.mark.parametrize("sql_file", CASES, ids=[os.path.basename(f)[:-4] for f in CASES])
+@parametrize_reference(
+    "sql_file", REF_DIR, CASES, ids=[os.path.basename(f)[:-4] for f in CASES]
+)
 def test_insert_case(insert_env, sql_file):
     name = os.path.basename(sql_file)[:-4]
     if name in SKIP:

@@ -11,7 +11,7 @@ from __future__ import annotations
 import glob
 import os
 
-import pytest
+from tests.conftest import parametrize_reference
 
 REF_DIR = "/root/reference/presto-product-tests/src/main/resources/sql-tests/testcases/ml_functions"
 
@@ -31,7 +31,9 @@ def _parse(path: str):
     return "\n".join(sql_lines).strip().rstrip(";"), rows
 
 
-@pytest.mark.parametrize("sql_file", CASES, ids=[os.path.basename(f)[:-4] for f in CASES])
+@parametrize_reference(
+    "sql_file", REF_DIR, CASES, ids=[os.path.basename(f)[:-4] for f in CASES]
+)
 def test_ml_case(engine, sql_file):
     sql, expected = _parse(sql_file)
     got = [tuple(str(v) for v in r) for r in engine.sql(sql, dialect="presto").collect()]

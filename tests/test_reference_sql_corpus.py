@@ -22,6 +22,8 @@ import re
 
 import pytest
 
+from tests.conftest import parametrize_reference
+
 REF_DIR = "/root/reference/presto-product-tests/src/main/resources/sql-tests/testcases/hive_tpch"
 
 FIXTURE_TABLES = {
@@ -82,7 +84,7 @@ def _oracle_dialect(sql: str) -> str:
     return re.sub(r"\bdate\s*\(\s*'([^']+)'\s*\)", r"DATE '\1'", sql, flags=re.IGNORECASE)
 
 
-@pytest.mark.parametrize("name,tables,sql", CASES, ids=[c[0] for c in CASES])
+@parametrize_reference("name,tables,sql", REF_DIR, CASES, ids=[c[0] for c in CASES])
 def test_reference_tpch_query(augmented, name, tables, sql):
     engine, oracle = augmented
     # q15 is a script: CREATE VIEW; SELECT — run setup statements through

@@ -29,7 +29,7 @@ import re
 import pytest
 
 from prestodb_presto_spark.testing import compare_tolerant
-from tests.conftest import require_reference
+from tests.conftest import parametrize_reference, require_reference
 
 REF_DIR = "/root/reference/presto-product-tests/src/main/resources/sql-tests/testcases"
 
@@ -341,8 +341,8 @@ def _golden_cell_match(got: str, exp: str) -> bool:
     return g == pytest.approx(e, rel=1e-9, abs=1e-9)
 
 
-@pytest.mark.parametrize(
-    "name,sql,exp,opts", CASES, ids=[c[0] for c in CASES]
+@parametrize_reference(
+    "name,sql,exp,opts", REF_DIR, CASES, ids=[c[0] for c in CASES]
 )
 def test_reference_suite_case(suites_env, name, sql, exp, opts):
     if name in SKIP:
@@ -412,8 +412,9 @@ NO_FROM_CASES = (
 )
 
 
-@pytest.mark.parametrize(
-    "sql_file", NO_FROM_CASES, ids=[os.path.basename(f)[:-4] for f in NO_FROM_CASES]
+@parametrize_reference(
+    "sql_file", REF_DIR, NO_FROM_CASES,
+    ids=[os.path.basename(f)[:-4] for f in NO_FROM_CASES],
 )
 def test_select_no_from_golden(engine, sql_file):
     """No-FROM projections vs the reference's own .result files — byte
@@ -469,8 +470,9 @@ def _num_or_str(cell: str):
         return cell
 
 
-@pytest.mark.parametrize(
-    "sql_file", AGG_GOLDEN_CASES, ids=[os.path.basename(f)[:-4] for f in AGG_GOLDEN_CASES]
+@parametrize_reference(
+    "sql_file", REF_DIR, AGG_GOLDEN_CASES,
+    ids=[os.path.basename(f)[:-4] for f in AGG_GOLDEN_CASES],
 )
 def test_aggregate_suite_golden(suites_env, sql_file):
     name = f"aggregate/{os.path.basename(sql_file)[:-4]}"
@@ -510,8 +512,9 @@ REGISTERED_SUITE_FILES = (
 )
 
 
-@pytest.mark.parametrize(
+@parametrize_reference(
     "result_file",
+    REF_DIR,
     REGISTERED_SUITE_FILES,
     ids=[f.split("/")[-2] for f in REGISTERED_SUITE_FILES],
 )
@@ -628,7 +631,9 @@ META_CASES = (
 )
 
 
-@pytest.mark.parametrize("name,sql,exp,opts", META_CASES, ids=[c[0] for c in META_CASES])
+@parametrize_reference(
+    "name,sql,exp,opts", REF_DIR, META_CASES, ids=[c[0] for c in META_CASES]
+)
 def test_catalog_system_suite_case(engine, name, sql, exp, opts):
     if name == "catalog/showFunctions":
         from prestodb_presto_spark import functions as freg
@@ -764,8 +769,8 @@ CONNECTOR_CASES = (
 CONN_DESCRIBE_ADAPT = "names-only: types are the remote store's spellings"
 
 
-@pytest.mark.parametrize(
-    "name,sql,exp,opts", CONNECTOR_CASES, ids=[c[0] for c in CONNECTOR_CASES]
+@parametrize_reference(
+    "name,sql,exp,opts", REF_DIR, CONNECTOR_CASES, ids=[c[0] for c in CONNECTOR_CASES]
 )
 def test_connectors_suite_case(connectors_env, name, sql, exp, opts):
     engine, url, jopts = connectors_env
@@ -934,8 +939,8 @@ def tpch_tiny_env(engine):
         spark.catalog.dropTempView(f"tpchconn_{name}")
 
 
-@pytest.mark.parametrize(
-    "name,sql,exp,opts", TPCH_CONN_CASES, ids=[c[0] for c in TPCH_CONN_CASES]
+@parametrize_reference(
+    "name,sql,exp,opts", REF_DIR, TPCH_CONN_CASES, ids=[c[0] for c in TPCH_CONN_CASES]
 )
 def test_tpch_connector_suite_case(tpch_tiny_env, name, sql, exp, opts):
     engine = tpch_tiny_env

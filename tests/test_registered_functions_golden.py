@@ -14,7 +14,7 @@ from __future__ import annotations
 import glob
 import os
 
-import pytest
+from tests.conftest import parametrize_reference
 
 REF_DIR = "/root/reference/presto-product-tests/src/main/resources/sql-tests/testcases"
 
@@ -50,8 +50,9 @@ def _names(path: str) -> set[str]:
     return names
 
 
-@pytest.mark.parametrize(
-    "path", RESULT_FILES, ids=[os.path.basename(os.path.dirname(f)) for f in RESULT_FILES]
+@parametrize_reference(
+    "path", REF_DIR, RESULT_FILES,
+    ids=[os.path.basename(os.path.dirname(f)) for f in RESULT_FILES],
 )
 def test_reference_required_functions_present(path):
     from prestodb_presto_spark import functions as fns

@@ -398,7 +398,16 @@ def test_dialect_tablesample_and_limit_all(engine):
     assert translate("SELECT * FROM t TABLESAMPLE BERNOULLI(10)") == (
         "SELECT * FROM t TABLESAMPLE (10 PERCENT)"
     )
-    assert "LIMIT" not in translate("SELECT * FROM t LIMIT ALL")
+    # Spark parses LIMIT ALL natively: the clause passes through and
+    # returns every row
+    assert engine.sql("SELECT * FROM region LIMIT ALL", dialect="presto").count() == 5
+    # ... and does not stop the grand-total row of an empty grouping set
+    rows = engine.sql(
+        "SELECT r_regionkey, count(*) AS n FROM region WHERE r_regionkey < 0"
+        " GROUP BY ROLLUP (r_regionkey) LIMIT ALL",
+        dialect="presto",
+    ).collect()
+    assert [tuple(r) for r in rows] == [(None, 0)]
     n = engine.sql(
         "SELECT count(*) AS n FROM (SELECT * FROM orders TABLESAMPLE SYSTEM(50) LIMIT ALL)",
         dialect="presto",
@@ -1682,6 +1691,24 @@ def test_explain_type_io_json(engine, spark):
         assert spark.table("io_probe_t").count() == 0  # never executed
     finally:
         spark.sql("DROP TABLE IF EXISTS io_probe_t")
+
+
+def test_explain_io_splits_read_schema_at_top_level():
+    """The ReadSchema split keeps a decimal's precision/scale comma and
+    nested struct fields inside their column."""
+    import json
+
+    from prestodb_presto_spark.ddl import explain_io
+
+    plan = (
+        "(1) Scan parquet default.t\n"
+        "ReadSchema: struct<a:decimal(10,2),b:struct<x:int,y:array<string>>>\n"
+    )
+    cols = json.loads(explain_io(plan))["inputTableColumnInfos"][0]["columns"]
+    assert cols == [
+        {"columnName": "a", "type": "decimal(10,2)"},
+        {"columnName": "b", "type": "struct<x:int,y:array<string>>"},
+    ]
 
 
 @pytest.fixture()

@@ -23,6 +23,7 @@ import os
 import pytest
 
 from prestodb_presto_spark.testing import norm_cell
+from tests.conftest import parametrize_reference
 
 # r14 (VERDICT #6): golden/fuzz suite — excluded from the default
 # driver-window run; see pytest.ini (duckdb dsdgen fixture generation + TPC-DS shapes (~25 s)).
@@ -118,8 +119,8 @@ def tpcds_env(engine, oracle, tmp_path_factory):
     )
 
 
-@pytest.mark.parametrize(
-    "sql_file", CASES, ids=[os.path.basename(f)[:-4] for f in CASES]
+@parametrize_reference(
+    "sql_file", REF_DIR, CASES, ids=[os.path.basename(f)[:-4] for f in CASES]
 )
 def test_tpcds_query(tpcds_env, sql_file):
     name = os.path.basename(sql_file)[:-4]
