@@ -23,12 +23,25 @@ literal as a \\x00<n>\\x00 sentinel and turns every "identifier" into
 put back at the end (and into any ValueError message).  For
 programmatic use the DataFrame registry (prestodb_presto_spark.functions)
 is the first-class surface.
+
+Every pass that rewrites the occurrences of a pattern runs on one
+rewriter, _rewrite, with one rule for where a rewrite resumes (the
+reference gets the same from rewriting its AST, ExpressionTreeRewriter):
+matches are taken left to right; when a match ends at an opening
+bracket, the occurrences inside that bracket are rewritten first, so
+the innermost occurrence is rewritten first and a call nested in a
+call of the same name translates at any depth; a replacement is never
+rescanned; a declined match resumes at its end.  A pass only says what
+to rewrite.  Text after the matched bracket that a replacement takes
+in (the right operand of a comparison) is not rewritten first; a pass
+that needs it rewritten applies itself to it (_row_eq_compat).
 """
 
 from __future__ import annotations
 
 import math
 import re
+from functools import lru_cache
 
 from prestodb_presto_spark.functions.datetime_fns import _mysql_to_java
 from prestodb_presto_spark.sqlscan import (
@@ -106,43 +119,70 @@ def _scan_balanced(sql: str, open_idx: int) -> tuple[int, list[str]]:
     return end + 1, [a for a in args if a] or [""]
 
 
-def _rewrite_calls(sql: str, name: str, fn) -> str:
-    """Replace every ``name(...)`` call with ``fn(args) -> str``."""
-    pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
+def _rewrite(sql: str, pat: re.Pattern, fn, top: bool = False) -> str:
+    """The one rewriter (its rule is in the module docstring).  ``fn(text, m)``
+    returns ``(start, end, replacement)`` for ``text[start:end]``, or
+    None to decline.  When ``m`` ends at an opening bracket, the
+    bracket's inside is rewritten before ``fn`` runs; ``m``'s own span
+    does not move, but ``fn`` must read ``text``, not ``m.string``.
+    With ``top`` only matches at bracket depth 0 are taken."""
+    if not pat.search(sql):
+        return sql
     out = sql
-    pos = 0
-    while True:
-        m = pat.search(out, pos)
-        if not m:
-            return out
-        end, args = _scan_balanced(out, m.end() - 1)
-        repl = fn(args)
-        if repl is None:  # leave this call untouched
-            pos = m.end()
-            continue
-        out = out[: m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+
+    def run(pos: int, hi: int) -> int:
+        # rewrite the matches in out[pos:hi]; returns hi after splicing
+        nonlocal out
+        while True:
+            m = find_top(out, pat, pos) if top else pat.search(out, pos, hi)
+            if not m:
+                return hi
+            resume = m.end()
+            if not top and out[m.end() - 1 : m.end()] in ("(", "["):
+                try:
+                    close = close_index(out, m.end() - 1)
+                except ValueError:  # unbalanced: fn decides
+                    close = None
+                if close is not None:
+                    new_close = run(m.end(), close)
+                    hi += new_close - close
+                    resume = new_close + 1
+            r = fn(out, m)
+            if r is None:
+                pos = resume
+                continue
+            s, e, repl = r
+            out = out[:s] + repl + out[e:]
+            hi += len(repl) - (e - s)
+            pos = s + len(repl)
+
+    run(0, len(out))
+    return out
 
 
-def _rewrite_calls_window_aware(sql: str, name: str, fn, windowed_fn) -> str:
-    """Like _rewrite_calls, but a call followed by an OVER clause routes
-    to ``windowed_fn`` (forms that collect into arrays cannot take a
-    window frame; the interpolating natives can)."""
-    pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-    out = sql
-    pos = 0
-    while True:
-        m = pat.search(out, pos)
-        if not m:
-            return out
+_OVER_AFTER = re.compile(r"\s*OVER\b", re.IGNORECASE)
+
+
+def _rewrite_calls(sql: str, name: str, fn, windowed=None) -> str:
+    """Replace every ``name(...)`` call with ``fn(args) -> str`` (None
+    leaves the call).  With ``windowed``, a call followed by an OVER
+    clause goes to ``windowed(args)`` instead (forms that collect into
+    arrays cannot take a window frame; the interpolating natives can)."""
+
+    def call(out: str, m: re.Match):
         end, args = _scan_balanced(out, m.end() - 1)
-        windowed = re.match(r"\s*OVER\b", out[end:], re.IGNORECASE)
-        repl = (windowed_fn if windowed else fn)(args)
-        if repl is None:  # leave this call untouched
-            pos = m.end()
-            continue
-        out = out[: m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        if windowed is not None and _OVER_AFTER.match(out, end):
+            repl = windowed(args)
+        else:
+            repl = fn(args)
+        return None if repl is None else (m.start(), end, repl)
+
+    return _rewrite(sql, _call_pattern(name), call)
+
+
+@lru_cache(maxsize=None)
+def _call_pattern(name: str) -> re.Pattern:
+    return re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
 
 
 _TOP_OP = re.compile(r"[/*+\-]")
@@ -337,34 +377,29 @@ def _approx_distinct_rewrite(args: list[str]) -> str | None:
     return None
 
 
+_TYPEOF_CALL = re.compile(r"(?i)\btypeof\s*\(")
+
+
 def _typeof_spelling_compat(sql: str) -> str:
     """TypeOfFunction.java: Presto type-name spellings (integer/varchar/
     unknown, parenthesized containers) from Spark's typeof.  Context-
     aware so translate() stays idempotent: a typeof immediately inside
     ``translate(`` is this pass's OWN prior expansion (or an equivalent
     user form) and is left alone."""
-    out = sql
-    pos = 0
-    pat = re.compile(r"(?i)\btypeof\s*\(")
-    while True:
-        m = pat.search(out, pos)
-        if not m:
-            return out
-        before = out[: m.start()].rstrip()
-        if before.lower().endswith("translate("):
-            pos = m.end()
-            continue
-        open_idx = out.index("(", m.start())
-        end, _ = _scan_balanced(out, open_idx)
-        arg = out[open_idx + 1 : end - 1]
+
+    def spell(out: str, m: re.Match):
+        if out[: m.start()].rstrip().lower().endswith("translate("):
+            return None
+        end = close_index(out, m.end() - 1)
         repl = (
             "regexp_replace(regexp_replace(regexp_replace("
-            f"translate(typeof({arg}), '<>', '()'),"
+            f"translate(typeof({out[m.end() : end]}), '<>', '()'),"
             " '\\bint\\b', 'integer'), '\\bstring\\b', 'varchar'),"
             " '\\bvoid\\b', 'unknown')"
         )
-        out = out[: m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        return m.start(), end + 1, repl
+
+    return _rewrite(sql, _TYPEOF_CALL, spell)
 
 
 def _native_checksum(args: list[str]) -> str:
@@ -466,28 +501,26 @@ def _approx_set_pack_native(arg: str) -> str:
     return f"presto_hll_pack(12, {n}, {st}, collect_set({entry}))"
 
 
+_MERGE_CREATE_HLL = re.compile(r"(?i)\bmerge\s*\((?=\s*create_hll\s*\()")
+_CREATE_HLL_HEAD = re.compile(r"(?i)\s*create_hll\s*\(")
+
+
 def _merge_create_hll_fuse(sql: str) -> str:
     """merge(create_hll(E)) == approx_set(E): merging per-row singleton
     sketches IS accumulating one sketch (presto-tests CreateHll.java:28
     builds HyperLogLog(4096).add(value) per row; testMergeHyperLogLog*
     assert the fused values), and the fused spelling lowers to the
     native p=12 parity plan instead of a per-row-singleton merge."""
-    pat = re.compile(r"(?i)\bmerge\s*\(\s*create_hll\s*\(")
-    pos = 0
-    while True:
-        m = pat.search(sql, pos)
-        if not m:
-            return sql
-        outer_open = sql.index("(", m.start())
-        outer_end, _ = _scan_balanced(sql, outer_open)
-        inner_open = sql.index("(", m.end() - 1)
-        inner_end, _ = _scan_balanced(sql, inner_open)
-        if sql[inner_end : outer_end - 1].strip():
-            pos = m.end()  # extra expression around create_hll: leave
-            continue
-        arg = sql[inner_open + 1 : inner_end - 1]
-        sql = sql[: m.start()] + f"approx_set({arg})" + sql[outer_end:]
-        pos = m.start()
+
+    def fuse(out: str, m: re.Match):
+        inner = _CREATE_HLL_HEAD.match(out, m.end())
+        outer_end = close_index(out, m.end() - 1)
+        inner_end = close_index(out, inner.end() - 1)
+        if out[inner_end + 1 : outer_end].strip():
+            return None  # extra expression around create_hll: leave
+        return m.start(), outer_end + 1, f"approx_set({out[inner.end() : inner_end]})"
+
+    return _rewrite(sql, _MERGE_CREATE_HLL, fuse)
 
 
 def _checksum_native_parity(arg: str, over: str = "") -> str:
@@ -559,14 +592,7 @@ def _parity_agg_compat(sql: str) -> str:
     windowed merge ARE parity (their sums / collect_list take the
     window clause)."""
     sql = _merge_create_hll_fuse(sql)
-    # mask nested (SELECT ..) spans — positions preserved
-    scope = sql
-    while True:
-        m = _PSELECT.search(scope)
-        if not m:
-            break
-        end, _ = _scan_balanced(scope, m.start())
-        scope = scope[: m.start()] + " " * (end - m.start()) + scope[end:]
+    scope = _mask_subqueries(sql)
 
     def head(text: str, *names: str):
         """Anchored 'name ( name ( ..' chain at the start of the MASKED
@@ -782,6 +808,10 @@ def _parity_agg_compat(sql: str) -> str:
     return _p4_cast_post("".join(out))
 
 
+_CAST_CALL = re.compile(r"(?i)\bcast\s*\(")
+_AS_P4 = re.compile(r"(?is)(.*)\s+AS\s+P4HYPERLOGLOG\s*$")
+
+
 def _p4_cast_post(sql: str) -> str:
     """Standalone CAST(X AS P4HYPERLOGLOG) — a STORED dense sketch
     (airlift HyperLogLog.makeDense), e.g. 'CTAS dense sketches, merge
@@ -791,25 +821,15 @@ def _p4_cast_post(sql: str) -> str:
     map would render it CAST(x AS BINARY) — type-correct but silently
     keeping the SPARSE representation, whose later cardinality diverges
     from Presto's P4 value."""
-    pat = re.compile(r"(?i)\bcast\s*\(")
-    pos = 0
-    while True:
-        m = pat.search(sql, pos)
-        if not m:
-            return sql
-        open_idx = sql.index("(", m.start())
-        end, _ = _scan_balanced(sql, open_idx)
-        body = sql[open_idx + 1 : end - 1]
-        mm = re.match(r"(?is)^(.*)\s+AS\s+P4HYPERLOGLOG\s*$", body)
+
+    def dense(out: str, m: re.Match):
+        end = close_index(out, m.end() - 1)
+        mm = _AS_P4.match(out, m.end(), end)
         if not mm:
-            pos = m.end()
-            continue
-        sql = (
-            sql[: m.start()]
-            + f"presto_hll_force_dense({mm.group(1)})"
-            + sql[end:]
-        )
-        pos = m.start()
+            return None
+        return m.start(), end + 1, f"presto_hll_force_dense({mm.group(1)})"
+
+    return _rewrite(sql, _CAST_CALL, dense)
 
 
 def _qdigest_pick_unweighted(x: str, q: str) -> str:
@@ -1105,7 +1125,7 @@ def _cast_rewrite(args: list[str], try_: bool = False) -> str | None:
         return f"substr(CAST({expr} AS STRING), 1, {vm.group(1)})"
     if typs.lower() in _INTEGRAL_TYPES and not _static_integral_safe(expr):
         if _STATIC_FRACTIONAL.match(expr):
-            return f"CAST(round({expr}) AS {typs})"
+            expr = f"round({expr})"
         if not _bool_shaped(expr):
             # runtime fractional → integral rounds HALF_UP in Presto
             # (DoubleOperators.castToLong uses Math.round; DecimalCasts);
@@ -1145,8 +1165,11 @@ def _try_cast_rewrite(args: list[str]) -> str | None:
         return None
     if out.upper().startswith(("CAST(", "TRY_CAST(")):
         return out if out.upper().startswith("TRY_") else "TRY_" + out
-    # CHAR-pad form: the cast inside rpad becomes the TRY_CAST
-    return out.replace("CAST(", "TRY_CAST(", 1)
+    # CHAR-pad / VARCHAR-truncate forms: their own cast becomes the
+    # TRY_CAST; a cast inside the operand (IPADDRESS's) is not this one
+    if out.startswith(("rpad(CAST(", "substr(CAST(")):
+        return out.replace("CAST(", "TRY_CAST(", 1)
+    return out
 
 
 # TABLESAMPLE BERNOULLI(p) / SYSTEM(p) (SqlBase.g4 sampleType) → Spark's
@@ -1160,13 +1183,12 @@ _ARRAY_LIT = re.compile(r"\bARRAY\s*\[", re.IGNORECASE)
 
 def _array_literals(sql: str) -> str:
     """Presto ARRAY[..] → Spark array(..)."""
-    out = sql
-    while True:
-        m = _ARRAY_LIT.search(out)
-        if not m:
-            return out
+
+    def ctor(out: str, m: re.Match):
         end, args = _scan_balanced(out, m.end() - 1)
-        out = out[: m.start()] + "array(" + ", ".join(args) + ")" + out[end:]
+        return m.start(), end, "array(" + ", ".join(args) + ")"
+
+    return _rewrite(sql, _ARRAY_LIT, ctor)
 
 
 _UNNEST = re.compile(
@@ -1221,11 +1243,8 @@ def _unnest_from_rewrite(sql: str) -> str:
 
     arrays_zip NULL-pads to the longest input, matching UnnestOperator's
     lockstep zip."""
-    out = sql
-    while True:
-        m = _UNNEST_FROM.search(out)
-        if not m:
-            return out
+
+    def lower(out: str, m: re.Match):
         end, exprs = _scan_balanced(out, m.end() - 1)
         tail_end, ordinality, alias, cols = _unnest_from_alias(out, end)
         if ordinality:
@@ -1255,7 +1274,9 @@ def _unnest_from_rewrite(sql: str) -> str:
             suffix = f" AS {alias}"
         else:
             suffix = " AS __unnest"
-        out = out[: m.start()] + "FROM " + body + suffix + out[tail_end:]
+        return m.start(), tail_end, "FROM " + body + suffix
+
+    return _rewrite(sql, _UNNEST_FROM, lower)
 
 
 def _unnest_rewrite(sql: str) -> str:
@@ -1272,11 +1293,8 @@ def _unnest_rewrite(sql: str) -> str:
     Bare ``FROM UNNEST(...)`` (no preceding relation) lowers first via
     _unnest_from_rewrite.
     """
-    out = _unnest_from_rewrite(sql)
-    while True:
-        m = _UNNEST.search(out)
-        if not m:
-            return out
+
+    def lateral(out: str, m: re.Match):
         end, exprs = _scan_balanced(out, m.end() - 1)
         tail = _UNNEST_TAIL.match(out, end)
         if not tail or tail.group(2).upper() in _RESERVED_AFTER_UNNEST:
@@ -1290,12 +1308,7 @@ def _unnest_rewrite(sql: str) -> str:
                 f"posexplode({e})" if om
                 else (f"explode({e})" if len(exprs) == 1 else f"inline({e})")
             )
-            out = (
-                out[: m.start()]
-                + f" LATERAL VIEW {gen} __unnest_{m.start()} "
-                + out[tail_end:]
-            )
-            continue
+            return m.start(), tail_end, f" LATERAL VIEW {gen} __unnest_{m.start()} "
         ordinal, alias, cols_s = tail.group(1), tail.group(2), tail.group(3)
         cols = [c.strip() for c in cols_s.split(",")]
         if ordinal:
@@ -1324,7 +1337,9 @@ def _unnest_rewrite(sql: str) -> str:
             raise ValueError(
                 f"UNNEST arity mismatch: {len(exprs)} expressions vs {len(cols)} columns"
             )
-        out = out[: m.start()] + " " + view + out[tail.end() :]
+        return m.start(), tail.end(), " " + view
+
+    return _rewrite(_unnest_from_rewrite(sql), _UNNEST, lateral)
 
 
 # --- end-to-end suite surface (AbstractTestQueries.java shapes) --------------
@@ -1345,50 +1360,50 @@ def _values_row_strip(sql: str) -> str:
     (AbstractTestQueries.java testRowFieldAccessor shapes).  Runs on
     masked SQL.  ROW( nested inside a parenthesized item stays a struct
     constructor, exactly as in Presto."""
-    out = sql
-    pos = 0
-    while True:
-        m = _VALUES_KW.search(out, pos)
-        if not m:
-            return out
-        i = m.end()
+
+    def strip(out: str, m: re.Match):
+        text, i = out, m.end()
         while True:
-            n = len(out)
-            while i < n and out[i].isspace():
+            n = len(text)
+            while i < n and text[i].isspace():
                 i += 1
             # (ROW(..)) — the constructor also binds inside one layer of
             # item parens (testRowFieldAccessorInAggregate's array rows)
-            pm = re.match(r"\(\s*ROW\s*\(", out[i:], re.IGNORECASE)
+            pm = re.match(r"\(\s*ROW\s*\(", text[i:], re.IGNORECASE)
             if pm:
                 inner_open = i + pm.end() - 1
-                inner_end, _inner_args = _scan_balanced(out, inner_open)
-                outer_end, _ = _scan_balanced(out, i)
+                inner_end, _inner_args = _scan_balanced(text, inner_open)
+                outer_end, _ = _scan_balanced(text, i)
                 # StatementAnalyzer.visitValues decomposes ANY row-typed
                 # row expression into its field types: (ROW(x)) is the
                 # value x, (ROW(a, b)) is a TWO-column row — so unwrap
                 # both parens + keyword regardless of arity
-                if out[inner_end : outer_end - 1].strip() == "":
-                    out = out[:i] + out[inner_open:inner_end] + out[outer_end:]
+                if text[inner_end : outer_end - 1].strip() == "":
+                    text = text[:i] + text[inner_open:inner_end] + text[outer_end:]
                     continue
-            rm = re.match(r"ROW\s*\(", out[i:], re.IGNORECASE)
+            rm = re.match(r"ROW\s*\(", text[i:], re.IGNORECASE)
             if rm:
                 open_idx = i + rm.end() - 1
-                end, _ = _scan_balanced(out, open_idx)
-                out = out[:i] + out[open_idx:]
+                end, _ = _scan_balanced(text, open_idx)
+                text = text[:i] + text[open_idx:]
                 i = i + (end - open_idx)
             else:
                 # the item runs to a top-level comma or the closing paren
-                comma = find_top(out, _COMMA, i, words=False)
-                i = min(level_end(out, i), comma.start() if comma else n)
-            n = len(out)
+                comma = find_top(text, _COMMA, i, words=False)
+                i = min(level_end(text, i), comma.start() if comma else n)
+            n = len(text)
             j = i
-            while j < n and out[j].isspace():
+            while j < n and text[j].isspace():
                 j += 1
-            if j < n and out[j] == ",":
+            if j < n and text[j] == ",":
                 i = j + 1
                 continue
             break
-        pos = m.end()
+        # the items may hold VALUES lists of their own
+        items = _values_row_strip(text[m.end() : i])
+        return m.end(), len(out) - (len(text) - i), items
+
+    return _rewrite(sql, _VALUES_KW, strip)
 
 
 _QUANT = re.compile(r"(<=|>=|<>|!=|=|<|>)\s*(ANY|ALL|SOME)\s*\(", re.IGNORECASE)
@@ -1413,11 +1428,8 @@ def _quantified_compat(sql: str) -> str:
     The left operand is extracted with the single-operand scanner, so
     ``a + 1 > ALL (q)`` would mis-bind to ``1``; Presto's own suites
     only use simple operands on the left of a quantifier."""
-    out = sql
-    while True:
-        m = _QUANT.search(out)
-        if not m:
-            return out
+
+    def lower(out: str, m: re.Match):
         op, quant = m.group(1), m.group(2).upper()
         if op == "!=":
             op = "<>"
@@ -1428,7 +1440,7 @@ def _quantified_compat(sql: str) -> str:
         start = _left_operand_start(out, m.start())
         x = out[start : m.start()].strip()
         if not x:
-            return out
+            return None
         if op == "=" and quant == "ANY":
             repl = f"({x} IN ({sub}))"
         elif op == "<>" and quant == "ALL":
@@ -1472,10 +1484,13 @@ def _quantified_compat(sql: str) -> str:
                 f"WHEN {s}.mx IS NULL THEN {_NULL_BOOL} "
                 f"{core} END)"
             )
-        out = out[:start] + repl + out[end:]
+        return start, end, repl
+
+    return _rewrite(sql, _QUANT, lower)
 
 
-_IN_VALUES = re.compile(r"\b(IN)\s*\(\s*VALUES\b", re.IGNORECASE)
+_IN_VALUES = re.compile(r"\bIN\s*\((?=\s*VALUES\b)", re.IGNORECASE)
+_MAP_CALL = re.compile(r"(?i)\bMAP\s*\(")
 
 
 def _map_in_compat(sql: str) -> str:
@@ -1485,19 +1500,13 @@ def _map_in_compat(sql: str) -> str:
     Compare canonical entry lists instead — sort_array(map_entries(m))
     on both sides — statically detectable when the operand and every
     list item are MAP constructors."""
-    out = sql
-    pos = 0
-    while True:
-        m = re.search(r"(?i)\bMAP\s*\(", out[pos:])
-        if not m:
-            return out
-        start = pos + m.start()
-        open_idx = pos + m.end() - 1
-        end, _ = _scan_balanced(out, open_idx)
+
+    def canon(out: str, m: re.Match):
+        start = m.start()
+        end, _ = _scan_balanced(out, m.end() - 1)
         im = re.match(r"\s*(NOT\s+)?IN\s*\(", out[end:], re.IGNORECASE)
         if not im:
-            pos = open_idx + 1  # still scan nested MAP( occurrences
-            continue
+            return None
         lstart = end + im.end() - 1
         lend, litems = _scan_balanced(out, lstart)
         inner = out[lstart + 1 : lend - 1].strip()
@@ -1514,8 +1523,7 @@ def _map_in_compat(sql: str) -> str:
             for it in items
         ]
         if not all(re.match(r"(?i)MAP\s*\(", s) for s in stripped):
-            pos = end
-            continue
+            return None
         wrapped = [f"sort_array(map_entries({s}))" for s in stripped]
         lhs = f"sort_array(map_entries({out[start:end]}))"
         neg = im.group(1) or ""
@@ -1523,29 +1531,39 @@ def _map_in_compat(sql: str) -> str:
             repl = f"{lhs} {neg}IN (VALUES {', '.join(f'({w})' for w in wrapped)})"
         else:
             repl = f"{lhs} {neg}IN ({', '.join(wrapped)})"
-        out = out[:start] + repl + out[lend:]
-        pos = start + len(repl)
+        return start, lend, repl
+
+    return _rewrite(sql, _MAP_CALL, canon)
 
 
 def _in_values_compat(sql: str) -> str:
     """``x IN (VALUES 1, 2)`` — Presto's grammar allows a VALUES body as
     the IN subquery; Spark needs an explicit SELECT wrapper."""
-    out = sql
-    pos = 0
-    while True:
-        m = _IN_VALUES.search(out, pos)
-        if not m:
-            return out
-        open_idx = out.index("(", m.end(1))
-        end, _ = _scan_balanced(out, open_idx)
-        inner = out[open_idx + 1 : end - 1]
+
+    def wrap(out: str, m: re.Match):
+        end = close_index(out, m.end() - 1)
         # Spark needs a table alias on a parenthesized VALUES in FROM
-        repl = f"(SELECT * FROM ({inner}) AS __v)"
-        out = out[: open_idx] + repl + out[end:]
-        pos = open_idx + len(repl)
+        return m.end() - 1, end + 1, f"(SELECT * FROM ({out[m.end() : end]}) AS __v)"
+
+    return _rewrite(sql, _IN_VALUES, wrap)
 
 
 _PSELECT = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
+_PSELECT_OPEN = re.compile(r"\((?=\s*SELECT\b)", re.IGNORECASE)
+_SELECT_HEAD = re.compile(r"\s*SELECT\b", re.IGNORECASE)
+_EXISTS_SELECT = re.compile(r"\bEXISTS\s*\((?=\s*SELECT\b)", re.IGNORECASE)
+
+
+def _mask_subqueries(text: str) -> str:
+    """``text`` with each ``(SELECT ..)`` span blanked to spaces, so its
+    positions stay valid."""
+
+    def blank(out: str, m: re.Match):
+        end = close_index(out, m.start()) + 1
+        return m.start(), end, " " * (end - m.start())
+
+    return _rewrite(text, _PSELECT, blank)
+
 
 _SUBQ_CLAUSES = ("FROM", "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
                  "UNION", "EXCEPT", "INTERSECT", "OFFSET", "FETCH", "WINDOW")
@@ -1569,26 +1587,26 @@ def _exists_no_from_compat(sql: str) -> str:
     the standalone SELECT (one row, filtered by c); Spark rejects EXISTS
     outside filter/join/projection positions (e.g. in ORDER BY).  The
     form folds exactly: no WHERE → TRUE, WHERE c → (c) IS TRUE."""
-    out = sql
-    pos = 0
-    while True:
-        m = re.search(r"\bEXISTS\s*\(\s*SELECT\b", out[pos:], re.IGNORECASE)
-        if not m:
-            return out
-        start = pos + m.start()
-        open_idx = out.index("(", start + 6)
-        end, _ = _scan_balanced(out, open_idx)
-        body = out[open_idx + 1 : end - 1]
-        sm = re.match(r"\s*SELECT\b", body, re.IGNORECASE)
-        parts = _no_from_select(body[sm.end() :])
+
+    def fold(out: str, m: re.Match):
+        end = close_index(out, m.end() - 1)
+        sm = _SELECT_HEAD.match(out, m.end())
+        parts = _no_from_select(out[sm.end() : end])
         if parts is None:
-            pos = end
-            continue
+            return None
         _items, cond = parts
         repl = "TRUE" if cond is None else f"(({cond.strip()}) IS TRUE)"
-        out = out[:start] + repl + out[end:]
-        pos = start + len(repl)
+        return m.start(), end + 1, repl
 
+    return _rewrite(sql, _EXISTS_SELECT, fold)
+
+
+_DERIVED_WRAPPER = re.compile(
+    r"\(\s*SELECT\s+\*\s+FROM\s*\(\s*SELECT\b", re.IGNORECASE
+)
+_DERIVED_WRAPPER_OPEN = re.compile(
+    r"\((?=\s*SELECT\s+\*\s+FROM\s*\(\s*SELECT\b)", re.IGNORECASE
+)
 
 _COLLAPSE_SKIP_BEFORE = {
     "EXISTS", "FROM", "JOIN", "LATERAL", "UNION", "EXCEPT", "INTERSECT",
@@ -1612,13 +1630,7 @@ def _item_has_own_agg(item: str) -> bool:
     that subquery's, and must not trigger the one-row-aggregation guard
     (e.g. the item ``(SELECT count(*) WHERE o.orderkey = 0)`` is a plain
     scalar-subquery expression, freely movable)."""
-    masked = item
-    while True:
-        m = _PSELECT.search(masked)
-        if not m:
-            return bool(_SCALAR_AGG_RE.search(masked))
-        end, _ = _scan_balanced(masked, m.start())
-        masked = masked[: m.start()] + " " * (end - m.start()) + masked[end:]
+    return bool(_SCALAR_AGG_RE.search(_mask_subqueries(item)))
 
 
 def _trivial_scalar_subquery_collapse(sql: str) -> str:
@@ -1627,36 +1639,27 @@ def _trivial_scalar_subquery_collapse(sql: str) -> str:
     or GROUP BY (SELECT l.orderkey) exceed Catalyst's subquery placement
     rules, but the no-FROM form folds exactly: the expression itself
     (NULL-when-filtered via CASE for the WHERE variant)."""
-    out = sql
-    pos = 0
-    while True:
-        m = _PSELECT.search(out, pos)
-        if not m:
-            return out
+
+    def collapse(out: str, m: re.Match):
         before = out[: m.start()].rstrip()
         w = re.search(r"([A-Za-z_]\w*)$", before)
         if (not before) or (w and w.group(1).upper() in _COLLAPSE_SKIP_BEFORE):
-            pos = m.end()
-            continue
+            return None
         # a comma-join derived table — `FROM a, (SELECT 1 AS x) b` — is a
         # relation, not a scalar; collapsing it breaks valid SQL
         if before.endswith(",") and _clause_at(out, m.start()) == "from":
-            pos = m.end()
-            continue
-        end, _ = _scan_balanced(out, m.start())
+            return None
+        end = close_index(out, m.start()) + 1
         rest = out[end:].lstrip()
         # a set-op / ORDER BY right after the parens means the group is
         # a parenthesized QUERY, not a scalar (a trailing LIMIT belongs
         # to the enclosing query in the scalar positions Presto allows)
         if re.match(r"(?i)(UNION|EXCEPT|INTERSECT|ORDER)\b", rest):
-            pos = m.end()
-            continue
-        body = out[m.start() + 1 : end - 1]
-        sm = re.match(r"\s*SELECT\b", body, re.IGNORECASE)
-        parts = _no_from_select(body[sm.end() :])
+            return None
+        sm = _SELECT_HEAD.match(out, m.end())
+        parts = _no_from_select(out[sm.end() : end - 1])
         if parts is None:
-            pos = end
-            continue
+            return None
         items, cond = parts
         item = items.strip()
         if (
@@ -1668,16 +1671,15 @@ def _trivial_scalar_subquery_collapse(sql: str) -> str:
             # (SELECT count(*) WHERE c) — leave it to Spark's subquery
             or _SCALAR_AGG_RE.search(item)
         ):
-            pos = end
-            continue
+            return None
         repl = (
             f"({item})"
             if cond is None
             else f"(CASE WHEN ({cond.strip()}) THEN {item} END)"
         )
-        out = out[: m.start()] + repl + out[end:]
-        # stay at the same position: the collapsed item may itself hold
-        # a nested (SELECT ..) that now becomes outermost
+        return m.start(), end, repl
+
+    return _rewrite(sql, _PSELECT_OPEN, collapse)
 
 
 def _derived_scalar_wrapper_flatten(sql: str) -> str:
@@ -1688,13 +1690,12 @@ def _derived_scalar_wrapper_flatten(sql: str) -> str:
     cannot resolve an outer column through two subquery levels.  The
     wrapper adds nothing — flatten to ``(<item>)``, which Spark's own
     single-level decorrelation (or the later no-FROM folds) then handles."""
-    pat = re.compile(r"\(\s*SELECT\s+\*\s+FROM\s*\(\s*SELECT\b", re.IGNORECASE)
-    out = sql
-    pos = 0
-    while True:
-        m = pat.search(out, pos)
-        if not m:
-            return out
+
+    def flatten(out: str, m: re.Match):
+        # the inner rewrite may have flattened the inner group already
+        wm = _DERIVED_WRAPPER.match(out, m.start())
+        if not wm:
+            return None
         # in FROM position the group is a derived TABLE, not a scalar
         # subquery — flattening it would orphan its alias
         before = out[: m.start()].rstrip()
@@ -1702,36 +1703,27 @@ def _derived_scalar_wrapper_flatten(sql: str) -> str:
         if (w and w.group(1).upper() in _COLLAPSE_SKIP_BEFORE) or (
             before.endswith(",") and _clause_at(out, m.start()) == "from"
         ):
-            pos = m.end()
-            continue
-        outer_open = m.start()
-        inner_open = out.rindex("(", outer_open + 1, m.end())
-        inner_end, _ = _scan_balanced(out, inner_open)
-        outer_end, _ = _scan_balanced(out, outer_open)
+            return None
+        inner_open = out.rindex("(", m.end(), wm.end())
+        inner_end = close_index(out, inner_open) + 1
+        outer_end = close_index(out, m.start()) + 1
         # the inner group must close the outer subquery (no alias or
         # trailing clauses), and its body be a single no-WHERE item
         if out[inner_end : outer_end - 1].strip():
-            pos = m.end()
-            continue
-        body = out[inner_open + 1 : inner_end - 1]
-        sm = re.match(r"\s*SELECT\b", body, re.IGNORECASE)
-        parts = _no_from_select(body[sm.end() :])
+            return None
+        parts = _no_from_select(out[wm.end() : inner_end - 1])
         if parts is None or parts[1] is not None or len(split_top(parts[0])) > 1:
-            pos = m.end()
-            continue
+            return None
         item = parts[0].strip()
         if not item or item == "*" or re.match(r"(?i)DISTINCT\b", item):
-            pos = m.end()
-            continue
+            return None
         # an aggregate item is a real one-row aggregation (SELECT max(o.c));
         # drop only the wrapper level, keeping the scalar-subquery boundary,
         # so the guarded collapse pass (not this one) decides its fate
         repl = f"(SELECT {item})" if _item_has_own_agg(item) else f"({item})"
-        if repl == out[outer_open:outer_end]:
-            pos = outer_end
-            continue
-        out = out[:outer_open] + repl + out[outer_end:]
-        # same position: the exposed item may itself start a foldable form
+        return m.start(), outer_end, repl
+
+    return _rewrite(sql, _DERIVED_WRAPPER_OPEN, flatten)
 
 
 def _collect_correlated_subqueries(text: str, alias: str) -> list[str]:
@@ -1761,20 +1753,12 @@ def _per_query_level(sql: str, fn) -> str:
     into each parenthesized SELECT body (innermost first), then apply
     *fn* to this level.  Lets top-level-anchored rewrites fire inside
     derived tables and subqueries too."""
-    out = sql
-    pos = 0
-    while True:
-        m = _PSELECT.search(out, pos)
-        if not m:
-            break
-        end, _ = _scan_balanced(out, m.start())
-        body = out[m.start() + 1 : end - 1]
-        new_body = _per_query_level(body, fn)
-        if new_body != body:
-            out = out[: m.start() + 1] + new_body + out[end - 1 :]
-            end = m.start() + 2 + len(new_body)
-        pos = end
-    return fn(out)
+
+    def level(out: str, m: re.Match):
+        end = close_index(out, m.start())
+        return m.end(), end, fn(out[m.end() : end])
+
+    return fn(_rewrite(sql, _PSELECT_OPEN, level))
 
 
 def _group_by_scalar_subquery_hoist(sql: str) -> str:
@@ -1852,6 +1836,7 @@ def _group_by_scalar_subquery_hoist(sql: str) -> str:
 
 
 _JOIN_KW = re.compile(r"(?i)\bJOIN\b")
+_ON_KW = re.compile(r"(?i)\bON\b")
 _FROM_KW = re.compile(r"(?i)FROM\b")
 _ORDER_BY = re.compile(r"(?i)ORDER\s+BY\b")
 _WHERE_END = re.compile(r"(?i)\b(GROUP|HAVING|ORDER|LIMIT|UNION|INTERSECT|EXCEPT)\b")
@@ -1880,40 +1865,33 @@ def _join_on_subquery_compat(sql: str) -> str:
     # the columns the hoisted predicate reads
     if find_top(sql, re.compile(r"(?i)\b(RIGHT|FULL)\b")):
         return sql
-    out = sql
-    jm_pos = 0
     pending: list[str] = []
-    while True:
-        jm = find_top(out, _JOIN_KW, jm_pos)
-        if jm is None:
-            break
+
+    def cross(out: str, jm: re.Match):
         j_at = jm.start()
         before = out[:j_at].rstrip()
-        lead = re.search(r"(?i)\b(LEFT|RIGHT|FULL|CROSS|NATURAL|OUTER)\s*$", before)
-        if lead:
-            jm_pos = j_at + 4
-            continue
-        om = find_top(out, re.compile(r"(?i)\bON\b"), j_at)
+        if re.search(r"(?i)\b(LEFT|RIGHT|FULL|CROSS|NATURAL|OUTER)\s*$", before):
+            return None
+        om = find_top(out, _ON_KW, j_at)
         if om is None:
-            jm_pos = j_at + 4
-            continue
+            return None
         on_at = om.start()
         cond_start = on_at + 2
         em = find_top(out, _JOIN_ON_CLAUSE_END, cond_start)
         cond_end = em.start() if em else len(out)
         cond = out[cond_start:cond_end]
         if not re.search(r"(?i)\(\s*SELECT\b|\bEXISTS\s*\(", cond):
-            jm_pos = cond_end
-            continue
+            return None
         # drop INNER if present, rewrite to CROSS JOIN, move cond to WHERE
-        inner = re.search(r"(?i)\bINNER\s*$", out[:j_at].rstrip())
-        cut = inner.start() if inner else j_at
-        out = (
-            out[:cut] + "CROSS JOIN" + out[j_at + 4 : on_at]
-            + out[cond_end:]
-        )
+        inner = re.search(r"(?i)\bINNER\s*$", before)
         pending.append(cond.strip())
-        jm_pos = cut + 10
+        return (
+            inner.start() if inner else j_at,
+            cond_end,
+            "CROSS JOIN" + out[j_at + 4 : on_at],
+        )
+
+    out = _rewrite(sql, _JOIN_KW, cross, top=True)
     if not pending:
         return sql
     conj = " AND ".join(f"({c})" for c in pending)
@@ -2297,48 +2275,41 @@ def _cast_target(content: str) -> str | None:
     return None
 
 
+_CMP_CAST = re.compile(r"\s*(?:=|<>|!=|<=|>=|<|>)\s*(CAST\s*\()", re.IGNORECASE)
+
+
 def _real_decimal_cmp_compat(sql: str) -> str:
     """REAL ⋈ DECIMAL comparisons coerce the decimal to REAL in Presto
     (TypeRegistry real/decimal coercion); Spark widens both to DOUBLE,
     where float literals like 1.2f no longer equal their decimal
     spelling.  Cast the decimal side down to REAL for the static
-    CAST-vs-CAST shape (balanced-paren scan, so CASE operands work)."""
-    out = sql
-    pos = 0
-    while True:
-        m = re.search(r"(?i)\bCAST\s*\(", out[pos:])
-        if not m:
-            return out
-        start = pos + m.start()
-        open_idx = out.index("(", start + 4)
-        end, _ = _scan_balanced(out, open_idx)
-        side = _cast_target(out[open_idx + 1 : end - 1])
-        m2 = re.match(
-            r"\s*(=|<>|!=|<=|>=|<|>)\s*CAST\s*\(", out[end:], re.IGNORECASE
-        )
+    CAST-vs-CAST shape (balanced-paren scan, so CASE operands work).
+    The right operand is part of the replacement, so it is not
+    rescanned."""
+
+    def coerce(out: str, m: re.Match):
+        start = m.start()
+        end = close_index(out, m.end() - 1) + 1
+        side = _cast_target(out[m.end() : end - 1])
+        m2 = _CMP_CAST.match(out, end)
         if side is None or not m2:
-            pos = open_idx + 1
-            continue
-        open2 = out.index("(", end + m2.end() - 1)
-        end2, _ = _scan_balanced(out, open2)
-        other = _cast_target(out[open2 + 1 : end2 - 1])
+            return None
+        rstart = m2.start(1)
+        end2 = close_index(out, m2.end() - 1) + 1
+        other = _cast_target(out[m2.end() : end2 - 1])
         if other is None or {side, other} != {"real", "dec"}:
-            pos = open_idx + 1
-            continue
+            return None
         if side == "dec":
-            out = (
-                out[:start] + "CAST(" + out[start:end] + " AS REAL)"
-                + out[end:]
-            )
+            repl = f"CAST({out[start:end]} AS REAL){out[end:end2]}"
         else:
-            rstart = end + re.search(
-                r"(?i)CAST\s*\($", out[end : open2 + 1]
-            ).start()
-            out = (
-                out[:rstart] + "CAST(" + out[rstart:end2] + " AS REAL)"
-                + out[end2:]
-            )
-        pos = end2 + len("CAST( AS REAL)")
+            repl = f"{out[start:rstart]}CAST({out[rstart:end2]} AS REAL)"
+        return start, end2, repl
+
+    return _rewrite(sql, _CAST_CALL, coerce)
+
+
+_PVALUES_OPEN = re.compile(r"\((?=\s*VALUES\b)", re.IGNORECASE)
+_VALUES_HEAD = re.compile(r"\s*VALUES", re.IGNORECASE)
 
 
 def _values_lambda_compat(sql: str) -> str:
@@ -2346,19 +2317,12 @@ def _values_lambda_compat(sql: str) -> str:
     foldable expressions and reject lambdas; rewrite the VALUES rows as
     a UNION ALL of SELECTs (exactly Presto's semantics for computed
     rows)."""
-    out = sql
-    pos = 0
-    while True:
-        m = re.search(r"\(\s*VALUES\b", out[pos:], re.IGNORECASE)
-        if not m:
-            return out
-        start = pos + m.start()
-        end, _ = _scan_balanced(out, start)
-        body = out[start + 1 : end - 1]
-        body = body[re.match(r"\s*VALUES", body, re.IGNORECASE).end() :]
+
+    def union(out: str, m: re.Match):
+        end = close_index(out, m.start()) + 1
+        body = out[_VALUES_HEAD.match(out, m.end()).end() : end - 1]
         if "->" not in body:
-            pos = end
-            continue
+            return None
         selects = []
         for r in split_top(body):
             r = r.strip()
@@ -2367,12 +2331,12 @@ def _values_lambda_compat(sql: str) -> str:
                 if e == len(r):
                     r = r[1:-1]
             selects.append(f"SELECT {r}")
-        repl = "(" + " UNION ALL ".join(selects) + ")"
-        out = out[:start] + repl + out[end:]
-        pos = start + len(repl)
+        return m.start(), end, "(" + " UNION ALL ".join(selects) + ")"
+
+    return _rewrite(sql, _PVALUES_OPEN, union)
 
 
-_IN_SUBQ = re.compile(r"\b(NOT\s+)?IN\s*\(\s*\(?\s*SELECT\b", re.IGNORECASE)
+_IN_SUBQ = re.compile(r"\b(NOT\s+)?IN\s*\((?=\s*\(?\s*SELECT\b)", re.IGNORECASE)
 
 _CLAUSE_WORD = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
 
@@ -2412,30 +2376,22 @@ def _in_subquery_3vl_compat(sql: str) -> str:
     disambiguation — same shape as the quantified-comparison lowering.
     WHERE/HAVING/ON positions are left to Spark's native semi/anti
     joins, which are both correct there and join-optimal."""
-    out = sql
-    pos = 0
-    while True:
-        m = _IN_SUBQ.search(out, pos)
-        if not m:
-            return out
+
+    def lower(out: str, m: re.Match):
         if _clause_at(out, m.start()) != "select":
-            pos = m.end()
-            continue
-        open_idx = out.index("(", m.start() + (len(m.group(1) or "") + 2))
-        end, _ = _scan_balanced(out, open_idx)
-        sub = out[open_idx + 1 : end - 1].strip()
+            return None
+        end = close_index(out, m.end() - 1) + 1
+        sub = out[m.end() : end - 1].strip()
         start = _left_operand_start(out, m.start())
         x = out[start : m.start()].strip()
         # bail on tuple operands (the single-column alias can't bind)
         if not x or (x.startswith("(") and "," in x):
-            pos = m.end()
-            continue
+            return None
         # a GROUP BY / HAVING twin of the same expression must stay
         # textually identical to the projection for Spark to match them
         norm = " ".join(out[start:end].split())
         if " ".join(out.split()).count(norm) > 1:
-            pos = m.end()
-            continue
+            return None
         s = (
             "(SELECT named_struct('n', count(*), 'nn', count(__qc)) "
             f"FROM ({sub}) AS __qa(__qc))"
@@ -2446,9 +2402,9 @@ def _in_subquery_3vl_compat(sql: str) -> str:
             f"WHEN ({x}) IS NULL THEN {_NULL_BOOL} "
             f"WHEN {s}.n > {s}.nn THEN {_NULL_BOOL} ELSE FALSE END)"
         )
-        repl = f"(NOT {core})" if m.group(1) else core
-        out = out[:start] + repl + out[end:]
-        pos = start + len(repl)
+        return start, end, f"(NOT {core})" if m.group(1) else core
+
+    return _rewrite(sql, _IN_SUBQ, lower)
 
 
 _HAS_GROUPING_SETS = re.compile(
@@ -2562,6 +2518,7 @@ def _empty_grouping_sets_compat(sql: str) -> str:
 
 
 _GS_KW = re.compile(r"(?i)GROUPING\s+SETS|CUBE\s*\(|ROLLUP\s*\(")
+_GROUPING_CALL = re.compile(r"(?i)\bgrouping\s*\(")
 _SELECT_KW = re.compile(r"(?i)SELECT\b")
 
 
@@ -2571,15 +2528,10 @@ def _grouping_plain_scope_fold(sql: str) -> str:
     sets clause in an OUTER or INNER block doesn't leak in
     (AbstractTestQueries testGroupingInTableSubquery: alternating GROUP
     BY and GROUPING SETS in one plan)."""
-    out = sql
-    pos = 0
-    while True:
-        m = re.search(r"(?i)\bgrouping\s*\(", out[pos:])
-        if not m:
-            return out
-        start = pos + m.start()
-        open_idx = out.index("(", start + 8)
-        end, _ = _scan_balanced(out, open_idx)
+
+    def fold(out: str, m: re.Match):
+        start = m.start()
+        end = close_index(out, m.end() - 1) + 1
         # innermost→outermost enclosing paren spans containing the call
         spans = [
             (o + 1, c)
@@ -2594,10 +2546,10 @@ def _grouping_plain_scope_fold(sql: str) -> str:
                 block = (s, e)
                 break
         if block and not find_top(out[block[0] : block[1]], _GS_KW, brackets="()"):
-            out = out[:start] + "0" + out[end:]
-            pos = start + 1
-        else:
-            pos = end
+            return start, end, "0"
+        return None
+
+    return _rewrite(sql, _GROUPING_CALL, fold)
 
 
 def _grouping_compat(sql: str) -> str:
@@ -2690,11 +2642,8 @@ def _group_by_distinct_compat(sql: str) -> str:
     grouping sets before expansion (SqlBase.g4 setQuantifier on
     groupBy); Spark has no DISTINCT there.  Dedupe the set list
     statically (whitespace-normalized) and drop the keyword."""
-    out = sql
-    while True:
-        m = _GB_DISTINCT.search(out)
-        if not m:
-            return out
+
+    def dedupe(out: str, m: re.Match):
         if not m.group(1):
             # GROUP BY DISTINCT a, b[, ROLLUP(..), CUBE(..), ...] — the
             # reference computes the CROSS PRODUCT of the composite
@@ -2711,15 +2660,9 @@ def _group_by_distinct_compat(sql: str) -> str:
             body_end = endm.start() if endm else len(out)
             body = out[m.end() : body_end]
             if not re.search(r"(?i)\b(ROLLUP|CUBE|GROUPING\s+SETS)\s*\(", body):
-                out = out[: m.start()] + "GROUP BY " + out[m.end() :]
-                continue
+                return m.start(), m.end(), "GROUP BY "
             sets_sql = _grouping_product_distinct(body)
-            out = (
-                out[: m.start()]
-                + f"GROUP BY GROUPING SETS ({sets_sql}) "
-                + out[body_end:]
-            )
-            continue
+            return m.start(), body_end, f"GROUP BY GROUPING SETS ({sets_sql}) "
         open_idx = out.index("(", m.end() - 1)
         end, sets = _scan_balanced(out, open_idx)
         seen, deduped = set(), []
@@ -2732,11 +2675,9 @@ def _group_by_distinct_compat(sql: str) -> str:
             d if d.lstrip().startswith("(") or d == "()" else f"({d})"
             for d in deduped
         )
-        out = (
-            out[: m.start()]
-            + f"GROUP BY GROUPING SETS ({body})"
-            + out[end:]
-        )
+        return m.start(), end, f"GROUP BY GROUPING SETS ({body})"
+
+    return _rewrite(sql, _GB_DISTINCT, dedupe)
 
 
 def _entries_sql(k: str, v: str) -> str:
@@ -2848,16 +2789,11 @@ def _array_agg_compat(sql: str) -> str:
     returns NULL — not [] — for an empty group, and folds a FILTER
     clause into the collected entry (equivalent, since NULL entries are
     dropped)."""
-    out = sql
-    pos = 0
-    while True:
-        m = _ARRAY_AGG_CALL.search(out, pos)
-        if not m:
-            return out
+
+    def collect(out: str, m: re.Match):
         end, args = _scan_balanced(out, m.end() - 1)
         if len(args) != 1 or args[0].strip().upper().startswith("DISTINCT"):
-            pos = m.end()
-            continue
+            return None
         pred = None
         tail_end = end
         fm = _FILTER_TAIL.match(out, end)
@@ -2866,9 +2802,9 @@ def _array_agg_compat(sql: str) -> str:
             fend, _ = _scan_balanced(out, open_idx)
             pred = out[fm.end() : fend - 1].strip()
             tail_end = fend
-        body = _array_agg_body(args[0], pred)
-        out = out[: m.start()] + body + out[tail_end:]
-        pos = m.start() + len(body)
+        return m.start(), tail_end, _array_agg_body(args[0], pred)
+
+    return _rewrite(sql, _ARRAY_AGG_CALL, collect)
 
 
 # DECIMAL 'x.yz' typed literal (presto-parser grammar) — Spark has no
@@ -3129,16 +3065,11 @@ def _array_cmp_decimal_compat(sql: str, literals: list[str]) -> str:
     scales (ARRAY [..10-scale..] = ARRAY [.., 0])."""
     if "array" not in sql.lower():
         return sql
-    out = sql
-    pos = 0
-    while True:
-        m = _CMP_OP.search(out, pos)
-        if not m:
-            return out
+
+    def unify(out: str, m: re.Match):
         op = m.group(1)
         if op == "=" and m.start() > 0 and out[m.start() - 1] in "<>!=":
-            pos = m.end()
-            continue
+            return None
         lstart = _left_operand_start(out, m.start())
         left = out[lstart : m.start()].strip()
         rend = _forward_operand_end(out, m.end())
@@ -3147,19 +3078,17 @@ def _array_cmp_decimal_compat(sql: str, literals: list[str]) -> str:
             re.match(r"^array\s*\(", left, re.IGNORECASE)
             and re.match(r"^array\s*\(", right, re.IGNORECASE)
         ):
-            pos = m.end()
-            continue
+            return None
         a = _parse_numeric_array(left, literals)
         b = _parse_numeric_array(right, literals)
         if a is None or b is None:
-            pos = m.end()
-            continue
+            return None
         s = _unified_scale([a, b])
         la = "array(" + ", ".join(_emit_dec38(n, s, literals) for n in a) + ")"
         rb = "array(" + ", ".join(_emit_dec38(n, s, literals) for n in b) + ")"
-        repl = f"{la} {op} {rb}"
-        out = out[:lstart] + repl + out[rend:]
-        pos = lstart + len(repl)
+        return lstart, rend, f"{la} {op} {rb}"
+
+    return _rewrite(sql, _CMP_OP, unify)
 
 
 def _concat_null_array_rewrite(args: list[str]) -> str | None:
@@ -3243,13 +3172,15 @@ def _fold_dec_concat(arr_txt, sc_txt, literals, append: bool) -> str | None:
     return "array(" + ", ".join(_emit_dec38(n, s, literals) for n in nodes) + ")"
 
 
+_CONCAT_OP = re.compile(r"\|\|")
+
+
 def _element_array_concat(sql: str, literals: list[str]) -> str:
-    out = sql
-    pos = 0
-    while True:
-        idx = out.find("||", pos)
-        if idx == -1:
-            return out
+    """``||`` between an array constructor and an element: Spark's ``||``
+    lowers both sides to concat() and fails on the type mix."""
+
+    def append(out: str, m: re.Match):
+        idx = m.start()
         left_txt, right_txt = out[:idx], out[idx + 2 :]
         la = _rev_array_span(left_txt)
         am0 = re.match(r"\s*array\s*\(", right_txt, re.IGNORECASE)
@@ -3261,17 +3192,10 @@ def _element_array_concat(sql: str, literals: list[str]) -> str:
             larr = left_txt[la:].strip()
             ln, rn = _all_nested(larr), _all_nested(rarr)
             if ln is False and rn is True:
-                repl = f"array_prepend({rarr}, {larr})"
-                out = out[:la] + repl + right_txt[aend:]
-                pos = la + len(repl)
-                continue
+                return la, idx + 2 + aend, f"array_prepend({rarr}, {larr})"
             if ln is True and rn is False:
-                repl = f"array_append({larr}, {rarr})"
-                out = out[:la] + repl + right_txt[aend:]
-                pos = la + len(repl)
-                continue
-            pos = idx + 2
-            continue
+                return la, idx + 2 + aend, f"array_append({larr}, {rarr})"
+            return None
         # array(..) || scalar-literal → array_append (or a folded
         # array constructor when decimal scales must unify)
         mr = _FWD_SCALAR.match(right_txt)
@@ -3280,9 +3204,7 @@ def _element_array_concat(sql: str, literals: list[str]) -> str:
             repl = _fold_dec_concat(
                 arr, mr.group(1), literals, append=True
             ) or f"array_append({arr}, {mr.group(1)})"
-            out = out[:la] + repl + right_txt[mr.end() :]
-            pos = la
-            continue
+            return la, idx + 2 + mr.end(), repl
         # scalar-literal || array(..) → array_prepend
         ml = _BWD_SCALAR.search(left_txt)
         am = re.match(r"\s*array\s*\(", right_txt, re.IGNORECASE)
@@ -3292,10 +3214,10 @@ def _element_array_concat(sql: str, literals: list[str]) -> str:
             repl = _fold_dec_concat(
                 arr, ml.group(1), literals, append=False
             ) or f"array_prepend({arr}, {ml.group(1)})"
-            out = out[: ml.start(1)] + repl + right_txt[aend:]
-            pos = ml.start(1)
-            continue
-        pos = idx + 2
+            return ml.start(1), idx + 2 + aend, repl
+        return None
+
+    return _rewrite(sql, _CONCAT_OP, append)
 
 
 def _array_except_null_rewrite(args: list[str]) -> str | None:
@@ -3426,21 +3348,31 @@ def _internal_try_rewrite(literals: list[str]):
     return fn
 
 
+_HARNESS_CALL = re.compile(r"(?i)\b(__internal_try|apply|invoke)\s*\(")
+
+
 def _harness_lambda_compat(sql: str, literals: list[str]) -> str:
     if "apply" not in sql.lower() and "invoke" not in sql.lower() \
             and "$internal$" not in sql:
         return sql
-    # the quoted name defeats \b-matching in _rewrite_calls; alias it
+    # the quoted name defeats \b-matching in the call pattern; alias it
     # (the identifier-quote pass has already turned " into `)
     out = sql.replace('"$internal$try"', "__internal_try")
     out = out.replace("`$internal$try`", "__internal_try")
-    for _ in range(8):  # nested applies: fixpoint over the emitted bodies
-        prev = out
-        out = _rewrite_calls(out, "__internal_try", _internal_try_rewrite(literals))
-        out = _rewrite_calls(out, "apply", _apply_invoke_rewrite(True))
-        out = _rewrite_calls(out, "invoke", _apply_invoke_rewrite(False))
-        if out == prev:
-            break
+    # one pass over the three names, so an application nested in
+    # another's lambda body (or in a TRY) is lowered first
+    rewrites = {
+        "__internal_try": _internal_try_rewrite(literals),
+        "apply": _apply_invoke_rewrite(True),
+        "invoke": _apply_invoke_rewrite(False),
+    }
+
+    def lower(text: str, m: re.Match):
+        end, args = _scan_balanced(text, m.end() - 1)
+        repl = rewrites[m.group(1).lower()](args)
+        return None if repl is None else (m.start(), end, repl)
+
+    out = _rewrite(out, _HARNESS_CALL, lower)
     return out.replace("__internal_try", '"$internal$try"')
 
 
@@ -3453,33 +3385,29 @@ _REL_KEYWORDS = re.compile(
 
 
 def _from_join_parens_strip(sql: str) -> str:
-    """``FROM (a JOIN b ...)`` — Presto's grammar allows a parenthesized
-    join relation (SqlBase.g4 relation); Spark's does not (the UNNEST
-    lowering's LATERAL VIEW cannot sit inside parens either).  The
-    parens are redundant when the group is not aliased — drop them.  A
-    subquery (inner text starting with SELECT/VALUES/WITH) keeps its
-    parens."""
-    out = sql
-    pos = 0
-    while True:
-        m = _FROM_PAREN.search(out, pos)
-        if not m:
-            return out
-        open_idx = out.index("(", m.end() - 1)
-        end, _ = _scan_balanced(out, open_idx)
-        inner = out[open_idx + 1 : end - 1]
-        lead = inner.lstrip()
-        if re.match(r"(?i)(SELECT|VALUES|WITH|TABLE)\b", lead) or not find_top(
-            inner, _JOIN_KW, brackets="()"
+    """``FROM (a CROSS JOIN UNNEST(..) AS u(x))`` — Spark parses a
+    parenthesized join relation (SqlBase.g4 relation), but the UNNEST
+    lowering turns the lateral UNNEST into a LATERAL VIEW, which Spark
+    rejects inside parens.  The parens are redundant when the group is
+    not aliased — drop them when the group holds a lateral UNNEST at
+    its top level.  A subquery (inner text starting with
+    SELECT/VALUES/WITH/TABLE) keeps its parens."""
+
+    def strip(out: str, m: re.Match):
+        end = close_index(out, m.end() - 1)
+        inner = out[m.end() : end]
+        if (
+            re.match(r"(?i)\s*(SELECT|VALUES|WITH|TABLE)\b", inner)
+            or not find_top(inner, _JOIN_KW, brackets="()")
+            or not find_top(inner, _UNNEST, brackets="()", words=False)
         ):
-            pos = end
-            continue
-        rest = out[end:].lstrip()
+            return None
+        rest = out[end + 1 :].lstrip()
         if rest[:1].isalpha() and not _REL_KEYWORDS.match(rest):
-            pos = end  # aliased derived table — leave it
-            continue
-        out = out[:open_idx] + inner.strip() + out[end:]
-        # re-scan from FROM: the stripped text may expose nesting
+            return None  # aliased derived table — leave it
+        return m.end() - 1, end + 1, inner.strip()
+
+    return _rewrite(sql, _FROM_PAREN, strip)
 
 
 # --- 1-based subscript (presto-parser SqlBase.g4 subscript) -----------------
@@ -3487,27 +3415,19 @@ def _from_join_parens_strip(sql: str) -> str:
 # for arrays.  element_at is 1-based for both arrays and maps.  Runs
 # after ARRAY[..] literals are rewritten, so remaining brackets are
 # subscripts.
+_SUBSCRIPT_OPEN = re.compile(r"(?<=[\w)\]\x00])\[")
+
+
 def _subscript_compat(sql: str) -> str:
-    out = sql
-    while True:
-        idx = next(
-            (
-                m.start()
-                for m in tokens(out, 0, "[]")
-                if m.lastgroup == "open"
-                and m.start() > 0
-                and (out[m.start() - 1].isalnum() or out[m.start() - 1] in ")]_\x00")
-            ),
-            None,
-        )
-        if idx is None:
-            return out
+    def element_at(out: str, m: re.Match):
+        idx = m.start()
+        if any(t.start() < idx < t.end() for t in tokens(out, 0, "")):
+            return None  # inside a quoted identifier
         try:
             k = close_index(out, idx, "[]")
         except ValueError:
-            return out
+            return None
         start = _left_operand_start(out, idx)
-        base = out[start:idx]
         index = out[idx + 1 : k]
         # a runtime BIGINT-typed index (Presto subscripts are BIGINT)
         # fails Spark's element_at(array, INT) signature; narrow it.
@@ -3515,7 +3435,9 @@ def _subscript_compat(sql: str) -> str:
         # numeric map keys upcast INT→BIGINT implicitly anyway.
         if re.search(r"(?i)\bAS\s+BIGINT\b", index):
             index = f"CAST(({index.strip()}) AS INT)"
-        out = out[:start] + f"element_at({base}, {index})" + out[k + 1 :]
+        return start, k + 1, f"element_at({out[start:idx]}, {index})"
+
+    return _rewrite(sql, _SUBSCRIPT_OPEN, element_at)
 
 
 # --- JSON cast compatibility (JsonOperators.java, JsonCastsRow/Map...) ------
@@ -3814,34 +3736,29 @@ _ROW_HEAD = re.compile(r"\brow\s*\(", re.IGNORECASE)
 
 
 def _row_eq_compat(sql: str) -> str:
-    out = sql
-    pos = 0
-    while True:
-        m = _ROW_HEAD.search(out, pos)
-        if not m:
-            return out
+    def fieldwise(out: str, m: re.Match):
         end1, args1 = _scan_balanced(out, m.end() - 1)
         m2 = re.match(r"\s*(!=|<>|=)\s*row\s*\(", out[end1:], re.IGNORECASE)
         if not m2:
-            pos = m.end()
-            continue
+            return None
         op = m2.group(1)
         end2, args2 = _scan_balanced(out, end1 + m2.end() - 1)
         if len(args1) != len(args2):
-            pos = m.end()
-            continue
+            return None
         terms = []
         for a, b in zip(args1, args2):
-            a, b = a.strip(), b.strip()
+            # the right row is not inside the matched bracket: its own
+            # row comparisons are rewritten here
+            a, b = a.strip(), _row_eq_compat(b.strip())
             # MAP operands stay bare so _map_eq_compat's head-matcher
             # sees them; everything else gets precedence parens
             la = a if _MAP_HEAD.match(a) else f"({a})"
             rb = b if _MAP_HEAD.match(b) else f"({b})"
             terms.append(f"{la} = {rb}")
         conj = " AND ".join(terms)
-        repl = f"({conj})" if op == "=" else f"(NOT ({conj}))"
-        out = out[: m.start()] + repl + out[end2:]
-        pos = m.start()
+        return m.start(), end2, f"({conj})" if op == "=" else f"(NOT ({conj}))"
+
+    return _rewrite(sql, _ROW_HEAD, fieldwise)
 
 
 # --- MAP equality (MapOperators.java EQUAL/NOT_EQUAL) -----------------------
@@ -3875,52 +3792,46 @@ def _map_distinct_eq(left: str, right: str) -> str:
     )
 
 
+def _null_map(s: str) -> bool:
+    return s.upper() == "NULL" or bool(
+        re.match(r"CAST\s*\(\s*NULL\s+AS\s+MAP", s, re.IGNORECASE)
+    )
+
+
 def _map_eq_compat(sql: str) -> str:
     if "MAP" not in sql.upper():
         return sql
-    out = sql
+
     # IS [NOT] DISTINCT FROM with a map operand (Spark rejects map
     # ordering): a MAP constructor is never NULL, so vs literal NULL it
     # is statically distinct; map-vs-map uses NULL-safe value equality
-    m = _CHAR_DISTINCT.search(out)
-    while m:
+    def distinct(out: str, m: re.Match):
         lstart = _left_operand_start(out, m.start())
         left = out[lstart : m.start()].strip()
         rend = _forward_operand_end(out, m.end())
         right = out[m.end() : rend].strip()
-        def _null_map(s: str) -> bool:
-            return s.upper() == "NULL" or bool(
-                re.match(r"CAST\s*\(\s*NULL\s+AS\s+MAP", s, re.IGNORECASE)
-            )
-
         mapish = _MAP_HEAD.match(left) or _MAP_HEAD.match(right) or (
             _null_map(left) and _null_map(right)
             and "MAP" in (left + right).upper()
         )
-        if left and right and mapish:
-            neg = bool(m.group(1))
-            ln, rn = _null_map(left), _null_map(right)
-            if ln or rn:
-                distinct = not (ln and rn)
-                repl = ("FALSE" if distinct else "TRUE") if neg else (
-                    "TRUE" if distinct else "FALSE"
-                )
-            else:
-                eq = _map_distinct_eq(left, right)
-                repl = eq if neg else f"(NOT {eq})"
-            out = out[:lstart] + repl + out[rend:]
-            m = _CHAR_DISTINCT.search(out, lstart + len(repl))
+        if not (left and right and mapish):
+            return None
+        neg = bool(m.group(1))
+        ln, rn = _null_map(left), _null_map(right)
+        if ln or rn:
+            differ = not (ln and rn)
+            repl = ("FALSE" if differ else "TRUE") if neg else (
+                "TRUE" if differ else "FALSE"
+            )
         else:
-            m = _CHAR_DISTINCT.search(out, m.end())
-    pos = 0
-    while True:
-        m = _MAP_EQ_OP.search(out, pos)
-        if not m:
-            return out
+            eq = _map_distinct_eq(left, right)
+            repl = eq if neg else f"(NOT {eq})"
+        return lstart, rend, repl
+
+    def equal(out: str, m: re.Match):
         idx, op = m.start(), m.group(1)
         if op == "=" and idx > 0 and out[idx - 1] in "<>!=":
-            pos = m.end()
-            continue
+            return None
         lstart = _left_operand_start(out, idx)
         left = out[lstart:idx].strip()
         rend = _forward_operand_end(out, m.end())
@@ -3940,11 +3851,11 @@ def _map_eq_compat(sql: str) -> str:
                 f" element_at({right}, __k) END)"
                 f" END)"
             )
-            repl = eq if op == "=" else f"(NOT {eq})"
-            out = out[:lstart] + repl + out[rend:]
-            pos = lstart + len(repl)
-        else:
-            pos = m.end()
+            return lstart, rend, eq if op == "=" else f"(NOT {eq})"
+        return None
+
+    out = _rewrite(sql, _CHAR_DISTINCT, distinct)
+    return _rewrite(out, _MAP_EQ_OP, equal)
 
 
 # JSON equality is structural (JsonOperators.java EQUAL): member order
@@ -3993,16 +3904,11 @@ _IP_CMP = re.compile(r"(<=|>=|<>|<|>)")
 def _ipaddress_cmp_compat(sql: str) -> str:
     if "__presto_ipaddress(" not in sql:
         return sql
-    out = sql
-    pos = 0
-    while True:
-        m = _IP_CMP.search(out, pos)
-        if not m:
-            return out
+
+    def keyed(out: str, m: re.Match):
         op = m.group(1)
         if op == "<>":
-            pos = m.end()
-            continue
+            return None
         lstart = _left_operand_start(out, m.start())
         left = out[lstart : m.start()].strip()
         rend = _forward_operand_end(out, m.end())
@@ -4010,41 +3916,32 @@ def _ipaddress_cmp_compat(sql: str) -> str:
         if left.startswith("__presto_ipaddress(") or right.startswith(
             "__presto_ipaddress("
         ):
-            repl = (
+            return lstart, rend, (
                 f"__presto_ipaddress_key({left}) {op} "
                 f"__presto_ipaddress_key({right})"
             )
-            out = out[:lstart] + repl + out[rend:]
-            pos = lstart + len(repl)
-        else:
-            pos = m.end()
+        return None
+
+    return _rewrite(sql, _IP_CMP, keyed)
 
 
 def _char_eq_compat(sql: str) -> str:
-    out = sql
-    pos = 0
-    while True:
-        m = _CMP_OP.search(out, pos)
-        if not m:
-            return out
+    def pad(out: str, m: re.Match):
         idx, op = m.start(), m.group(1)
         # skip lambda arrows and the tail of compound operators
         if op == ">" and idx > 0 and out[idx - 1] == "-":
-            pos = m.end()
-            continue
+            return None
         if op == "=" and idx > 0 and out[idx - 1] in "<>!=":
-            pos = m.end()
-            continue
+            return None
         lstart = _left_operand_start(out, idx)
         left = out[lstart:idx].strip()
         rend = _forward_operand_end(out, m.end())
         right = out[m.end() : rend].strip()
         if left and right and (_CHAR_CAST.search(left) or _CHAR_CAST.search(right)):
-            repl = f"{_char_pad(left, right)} {op} {_char_pad(right, left)}"
-            out = out[:lstart] + repl + out[rend:]
-            pos = lstart + len(repl)
-        else:
-            pos = m.end()
+            return lstart, rend, f"{_char_pad(left, right)} {op} {_char_pad(right, left)}"
+        return None
+
+    return _rewrite(sql, _CMP_OP, pad)
 
 
 def _char_pad(a: str, b: str) -> str:
@@ -4067,22 +3964,18 @@ _CHAR_BETWEEN = re.compile(r"\bBETWEEN\b", re.IGNORECASE)
 
 def _char_distinct_between_compat(sql: str) -> str:
     """CHAR coercion for IS [NOT] DISTINCT FROM and BETWEEN."""
-    out = sql
-    m = _CHAR_DISTINCT.search(out)
-    while m:
+
+    def distinct(out: str, m: re.Match):
         lstart = _left_operand_start(out, m.start())
         left = out[lstart : m.start()].strip()
         rend = _forward_operand_end(out, m.end())
         right = out[m.end() : rend].strip()
         if left and right and (_CHAR_CAST.search(left) or _CHAR_CAST.search(right)):
             mid = " IS NOT DISTINCT FROM " if m.group(1) else " IS DISTINCT FROM "
-            repl = _char_pad(left, right) + mid + _char_pad(right, left)
-            out = out[:lstart] + repl + out[rend:]
-            m = _CHAR_DISTINCT.search(out, lstart + len(repl))
-        else:
-            m = _CHAR_DISTINCT.search(out, m.end())
-    m = _CHAR_BETWEEN.search(out)
-    while m:
+            return lstart, rend, _char_pad(left, right) + mid + _char_pad(right, left)
+        return None
+
+    def between(out: str, m: re.Match):
         lstart = _left_operand_start(out, m.start())
         x = out[lstart : m.start()].strip()
         negated = False
@@ -4095,8 +3988,7 @@ def _char_distinct_between_compat(sql: str) -> str:
         lo = out[m.end() : lo_end].strip()
         am = re.match(r"\s*AND\b", out[lo_end:], re.IGNORECASE)
         if not am:
-            m = _CHAR_BETWEEN.search(out, m.end())
-            continue
+            return None
         hi_end = _forward_operand_end(out, lo_end + am.end())
         hi = out[lo_end + am.end() : hi_end].strip()
         if x and lo and hi and any(_CHAR_CAST.search(s) for s in (x, lo, hi)):
@@ -4104,12 +3996,11 @@ def _char_distinct_between_compat(sql: str) -> str:
                 f"({_char_pad(x, lo)} >= {_char_pad(lo, x)}"
                 f" AND {_char_pad(x, hi)} <= {_char_pad(hi, x)})"
             )
-            repl = f"(NOT {body})" if negated else body
-            out = out[:lstart] + repl + out[hi_end:]
-            m = _CHAR_BETWEEN.search(out, lstart + len(repl))
-        else:
-            m = _CHAR_BETWEEN.search(out, m.end())
-    return out
+            return lstart, hi_end, f"(NOT {body})" if negated else body
+        return None
+
+    out = _rewrite(sql, _CHAR_DISTINCT, distinct)
+    return _rewrite(out, _CHAR_BETWEEN, between)
 
 
 # --- LIKE compatibility (presto-parser SqlBase.g4 predicate / Types.java) ---
@@ -4460,26 +4351,19 @@ def _transform_fractional_cast(sql: str) -> str:
     integral casts of a double element ROUND (DoubleOperators), and
     concat(array, x) with a scalar element is array_append
     (ArrayConcatUtils appendElement)."""
-    out = sql
-    pos = 0
-    while True:
-        m = _TRANSFORM_HEAD.search(out, pos)
-        if not m:
-            return out
+
+    def typed(out: str, m: re.Match):
         end, args = _scan_balanced(out, m.end() - 1)
         if len(args) != 2:
-            pos = m.end()
-            continue
+            return None
         arr, lam = args
         am = re.fullmatch(r"\s*array\s*\(([^()]*)\)\s*", arr, re.IGNORECASE)
         lm = re.match(r"\s*(\w+)\s*->", lam)
         if not (am and lm):
-            pos = m.end()
-            continue
+            return None
         elems = [e.strip() for e in am.group(1).split(",")]
         if not all(_SCALAR_ELEM.fullmatch(e) for e in elems):
-            pos = m.end()
-            continue
+            return None
         p = lm.group(1)
         new_lam = lam
         if all(
@@ -4500,11 +4384,10 @@ def _transform_fractional_cast(sql: str) -> str:
             flags=re.IGNORECASE,
         )
         if new_lam == lam:
-            pos = m.end()
-            continue
-        repl = f"transform({arr}, {new_lam})"
-        out = out[: m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+            return None
+        return m.start(), end, f"transform({arr}, {new_lam})"
+
+    return _rewrite(sql, _TRANSFORM_HEAD, typed)
 
 
 def _map_zip_with_int_div(literals: list[str]):
@@ -5346,39 +5229,32 @@ _AT_TZ_POSTFIX = re.compile(
 
 
 def _tz_field_rewrite(unit: str):
-    def fn(args: list[str]) -> str | None:
-        m = _AT_TZ_IN_ARG.match(args[0])
-        if not m:
-            return None
-        expr, tz = m.groups()
-        off = f"(unix_timestamp(from_utc_timestamp({expr}, {tz})) - unix_timestamp({expr}))"
-        if unit == "hour":
-            return f"CAST({off} / 3600 AS BIGINT)"
-        return f"CAST(({off} % 3600) / 60 AS BIGINT)"
-
-    return fn
-
-
-def _tz_field_plain(unit: str):
-    """timezone_hour/minute over a plain (zone-less) timestamp: the
+    """timezone_hour/minute: over an AT TIME ZONE argument, the offset of
+    that zone at the instant; over a plain (zone-less) timestamp, the
     offset of the SESSION zone at that instant (reference
     DateTimeFunctions.timeZoneHourFromTimestamp on a session-zoned
     value).  The engine default pins UTC → 0; a session that sets
     spark.sql.session.timeZone gets that zone's offset."""
 
     def fn(args: list[str]) -> str | None:
-        if _AT_TZ_IN_ARG.match(args[0]):
-            return None
-        a = args[0]
-        if a.strip().lower() == "localtimestamp":
-            a = "localtimestamp()"  # bare form only parses at top level
-        # TIMESTAMP_NTZ (e.g. localtimestamp) doesn't shift under
-        # from_utc_timestamp — normalize to TIMESTAMP first
-        a = f"CAST({a} AS TIMESTAMP)"
-        off = (
-            f"(unix_timestamp(from_utc_timestamp({a}, current_timezone()))"
-            f" - unix_timestamp({a}))"
-        )
+        m = _AT_TZ_IN_ARG.match(args[0])
+        if m:
+            expr, tz = m.groups()
+            off = (
+                f"(unix_timestamp(from_utc_timestamp({expr}, {tz}))"
+                f" - unix_timestamp({expr}))"
+            )
+        else:
+            a = args[0]
+            if a.strip().lower() == "localtimestamp":
+                a = "localtimestamp()"  # bare form only parses at top level
+            # TIMESTAMP_NTZ (e.g. localtimestamp) doesn't shift under
+            # from_utc_timestamp — normalize to TIMESTAMP first
+            a = f"CAST({a} AS TIMESTAMP)"
+            off = (
+                f"(unix_timestamp(from_utc_timestamp({a}, current_timezone()))"
+                f" - unix_timestamp({a}))"
+            )
         if unit == "hour":
             return f"CAST({off} / 3600 AS BIGINT)"
         return f"CAST(({off} % 3600) / 60 AS BIGINT)"
@@ -5419,32 +5295,25 @@ _ENDS_DESC = re.compile(r"\bdesc\s*$", re.IGNORECASE)
 
 
 def _order_by_nulls(sql: str) -> str:
-    out = sql
-    pos = 0
-    while True:
-        m = _ORDER_BY_KW.search(out, pos)
-        if not m:
-            return out
+    def explicit(out: str, m: re.Match):
         # the sort items end at a closing paren, a ``;`` or a clause
         # keyword, all at depth 0
-        start = m.end()
-        end = level_end(out, start)
-        stop = find_top(out, _OB_STOP, start, words=False)
+        end = level_end(out, m.end())
+        stop = find_top(out, _OB_STOP, m.end(), words=False)
         if stop and stop.start() < end:
             end = stop.start()
-        items: list[tuple[int, int]] = []  # (start, end) spans
-        for part in split_top(out[start:end]):
-            items.append((start, start + len(part)))
-            start += len(part) + 1
-        # rewrite items back-to-front so earlier spans stay valid
-        for s, e in reversed(items):
-            item = out[s:e]
+        items = []
+        for item in split_top(out[m.end() : end]):
+            # an item may hold ORDER BYs of its own (OVER, subqueries)
+            item = _order_by_nulls(item)
             body = item.rstrip()
-            if not body.strip() or _HAS_NULLS.search(body):
-                continue
-            suffix = " NULLS FIRST" if _ENDS_DESC.search(body) else " NULLS LAST"
-            out = out[:s] + body + suffix + item[len(body):] + out[e:]
-        pos = m.end()
+            if body.strip() and not _HAS_NULLS.search(body):
+                suffix = " NULLS FIRST" if _ENDS_DESC.search(body) else " NULLS LAST"
+                item = body + suffix + item[len(body) :]
+            items.append(item)
+        return m.end(), end, ",".join(items)
+
+    return _rewrite(sql, _ORDER_BY_KW, explicit)
 
 
 # Window functions that reject an explicit frame in Spark (Presto parses
@@ -5505,18 +5374,13 @@ def _window_arg_compat(sql: str, literals: list[str]) -> str:
       formula (NTileFunction: first `count % n` buckets get the extra
       row) over row_number/count windows.
     """
-    out = sql
-    pos = 0
-    while True:
-        m = _WINARG_PAT.search(out, pos)
-        if not m:
-            return out
+
+    def lower(out: str, m: re.Match):
         fn = m.group(1).lower()
         call_end, args = _scan_balanced(out, m.end() - 1)
         om = _OVER_PAT.match(out, call_end)
         if not om:
-            pos = call_end
-            continue
+            return None
         spec_open = om.end() - 1
         spec_end, _ = _scan_balanced(out, spec_open)
         spec = out[spec_open + 1 : spec_end - 1]
@@ -5557,11 +5421,9 @@ def _window_arg_compat(sql: str, literals: list[str]) -> str:
                 f" WHEN {p} < ({q} + 1) * {r} THEN {p} DIV ({q} + 1) + 1"
                 f" ELSE {r} + ({p} - ({q} + 1) * {r}) DIV {q} + 1 END)"
             )
-        if repl is None:
-            pos = call_end
-            continue
-        out = out[: m.start()] + repl + out[spec_end:]
-        pos = m.start() + len(repl)
+        return None if repl is None else (m.start(), spec_end, repl)
+
+    return _rewrite(sql, _WINARG_PAT, lower)
 
 
 def _window_compat(sql: str) -> str:
@@ -5572,26 +5434,21 @@ def _window_compat(sql: str) -> str:
     matching the reference; row_number stays arbitrary-order, which is
     exactly Presto's behavior too).  Reference grammar: SqlBase.g4
     windowFrame is optional and unrestricted per function."""
-    out = sql
-    pos = 0
-    while True:
-        m = _WINFN_PAT.search(out, pos)
-        if not m:
-            return out
+
+    def respec(out: str, m: re.Match):
         fn = m.group(1).lower()
-        call_end, _ = _scan_balanced(out, m.end() - 1)
+        call_end = close_index(out, m.end() - 1) + 1
         om = _OVER_PAT.match(out, call_end)
         if not om:
-            pos = call_end
-            continue
-        spec_open = om.end() - 1
-        spec_end, _ = _scan_balanced(out, spec_open)
-        spec = out[spec_open + 1 : spec_end - 1]
+            return None
+        spec_end = close_index(out, om.end() - 1)
+        spec = out[om.end() : spec_end]
         new_spec = re.sub(r"\b(rows|range|groups)\b.*$", "", spec, flags=re.IGNORECASE | re.DOTALL).rstrip()
         if fn in _RANKING_FNS and not re.search(r"\border\s+by\b", new_spec, re.IGNORECASE):
             new_spec = (new_spec + " ORDER BY 1").strip()
-        out = out[: spec_open + 1] + new_spec + out[spec_end - 1 :]
-        pos = spec_open + len(new_spec)
+        return om.end(), spec_end, new_spec
+
+    return _rewrite(sql, _WINFN_PAT, respec)
 
 
 def _decimal_lit(m: re.Match) -> str:
@@ -5736,6 +5593,9 @@ def _fold_decimal_arith(sql: str, literals: list[str]) -> str:
                     continue
                 out = out[: m.start()] + repl + out[m.end() :]
                 changed = True
+                # not _rewrite's rule: the folded value is the left
+                # operand of the next fold in a left-associative chain
+                # (a - b - c), so the scan resumes AT the replacement
                 pos = m.start()
         if not changed:
             return out
@@ -5780,12 +5640,7 @@ _UNARY_PRECEDERS = {
 
 
 def _fold_decimal_negation(sql: str, literals: list[str]) -> str:
-    out = sql
-    pos = 0
-    while True:
-        m = _NEG_DEC_CAST.search(out, pos)
-        if not m:
-            return out
+    def negate(out: str, m: re.Match):
         head = out[: m.start()].rstrip()
         prev = head[-1:] if head else ""
         if prev and (prev.isalnum() or prev in ")]\x00"):
@@ -5793,14 +5648,13 @@ def _fold_decimal_negation(sql: str, literals: list[str]) -> str:
             # SQL keyword
             wm = re.search(r"(\w+)$", head)
             if not (wm and wm.group(1).lower() in _UNARY_PRECEDERS):
-                pos = m.end()
-                continue
+                return None
         content = literals[int(m.group(1))][1:-1]
         neg = content[1:] if content.startswith("-") else "-" + content
         literals.append("'" + neg + "'")
-        repl = f"CAST(\x00{len(literals) - 1}\x00 AS {m.group(2)})"
-        out = out[: m.start()] + repl + out[m.end() :]
-        pos = m.start() + len(repl)
+        return m.start(), m.end(), f"CAST(\x00{len(literals) - 1}\x00 AS {m.group(2)})"
+
+    return _rewrite(sql, _NEG_DEC_CAST, negate)
 
 
 # the reference test harness's bound input symbols and their page
@@ -5977,27 +5831,17 @@ def _translate(sql: str, literals: list[str]) -> str:
     out = _empty_grouping_sets_compat(out)
     out = _grouping_plain_scope_fold(out)
     out = _grouping_compat(out)
-    out = _rewrite_calls_window_aware(
+    out = _rewrite_calls(
         out, "approx_percentile", _approx_percentile_rewrite, _approx_percentile_interp
     )
     # per query level: the no-other-aggregate guard must look only at
     # ITS query's select/having text, not the whole statement
     out = _per_query_level(out, _parity_agg_compat)
     out = _rewrite_calls(out, "TRY", lambda a: _try_rewrite(a, literals))
-    # fixpoint: a rewritten outer TRY_CAST may embed an unprocessed
-    # nested try_cast (the call scanner skips replacement text)
-    for _ in range(4):
-        prev_tc = out
-        out = _rewrite_calls(out, "TRY_CAST", _try_cast_rewrite)
-        if out == prev_tc:
-            break
-    # fixpoint: a folded inner CAST(.. AS JSON) re-exposes a JSON
-    # literal an outer CAST(.. AS MAP/ARRAY/ROW) can then consume
-    for _ in range(4):
-        prev_json = out
-        out = _rewrite_calls(out, "CAST", _json_cast_rewrite(literals))
-        if out == prev_json:
-            break
+    out = _rewrite_calls(out, "TRY_CAST", _try_cast_rewrite)
+    # a folded inner CAST(.. AS JSON) leaves a JSON literal the outer
+    # CAST(.. AS MAP/ARRAY/ROW) then consumes
+    out = _rewrite_calls(out, "CAST", _json_cast_rewrite(literals))
     out = _json_literal_eq(out, literals)
     out = _row_eq_compat(out)
     out = _map_eq_compat(out)
@@ -6047,13 +5891,7 @@ def _translate(sql: str, literals: list[str]) -> str:
         return None
 
     out = _rewrite_calls(out, "vl", _vl_static)
-    # to fixpoint: a rewritten outer CAST skips nested CASTs inside its
-    # replacement (the scanner resumes past it)
-    for _ in range(5):
-        prev_cast = out
-        out = _rewrite_calls(out, "CAST", _cast_rewrite)
-        if out == prev_cast:
-            break
+    out = _rewrite_calls(out, "CAST", _cast_rewrite)
     # VALUES ROW(..) is the grammar's explicit row constructor — strip
     # the keyword BEFORE the generic ROW() → named_struct pass
     out = _values_row_strip(out)
@@ -6068,11 +5906,7 @@ def _translate(sql: str, literals: list[str]) -> str:
         )
         return f"named_struct({fields})"
 
-    for _ in range(5):  # nested ROW constructors
-        prev_row = out
-        out = _rewrite_calls(out, "row", _row_ctor)
-        if out == prev_row:
-            break
+    out = _rewrite_calls(out, "row", _row_ctor)
 
     def _map_ctor(args: list[str]) -> str | None:
         # Presto MAP(key_array, value_array) / MAP() constructors
@@ -6091,19 +5925,11 @@ def _translate(sql: str, literals: list[str]) -> str:
             return "map()"
         return None
 
-    for _ in range(5):  # nested MAP constructors (map values/keys)
-        prev_map = out
-        out = _rewrite_calls(out, "map", _map_ctor)
-        if out == prev_map:
-            break
+    out = _rewrite_calls(out, "map", _map_ctor)
     out = _rewrite_calls(out, "classify", _classify_rewrite)
     out = _rewrite_calls(out, "learn_classifier", _learn_classifier_rewrite)
     out = _rewrite_calls(out, "features", _features_rewrite)
     out = _rewrite_calls(out, "random", _random_rewrite)
-    out = _rewrite_calls(out, "timezone_hour", _tz_field_rewrite("hour"))
-    out = _rewrite_calls(out, "timezone_minute", _tz_field_rewrite("minute"))
-    out = _rewrite_calls(out, "timezone_hour", _tz_field_plain("hour"))
-    out = _rewrite_calls(out, "timezone_minute", _tz_field_plain("minute"))
     out = _fold_decimal_negation(out, literals)
     out = _fold_decimal_arith(out, literals)
     out = _fold_real_decimal_cast(out, literals)
@@ -6111,12 +5937,10 @@ def _translate(sql: str, literals: list[str]) -> str:
     out = _division_compat(out, literals)
     out = _extract_compat(out, literals)
     out = _rewrite_calls(out, "extract", _extract_field_rewrite)
-    # the TIMEZONE_HOUR/MINUTE extract fields emit timezone_* calls,
-    # and the scalar lowering pass has already run — re-apply it
+    # after the extract passes: the TIMEZONE_HOUR/MINUTE fields emit
+    # timezone_* calls
     out = _rewrite_calls(out, "timezone_hour", _tz_field_rewrite("hour"))
     out = _rewrite_calls(out, "timezone_minute", _tz_field_rewrite("minute"))
-    out = _rewrite_calls(out, "timezone_hour", _tz_field_plain("hour"))
-    out = _rewrite_calls(out, "timezone_minute", _tz_field_plain("minute"))
     out = _like_compat(out, literals)
     out = _rewrite_calls(out, "split", _split_rewrite)
     out = _rewrite_calls(out, "map_zip_with", _map_zip_with_int_div(literals))

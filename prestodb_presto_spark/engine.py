@@ -38,6 +38,19 @@ TABLES = (
 ALWAYS_BROADCAST = {"region", "nation"}
 
 
+def _sub_outside_literals(pat, repl, text: str) -> str:
+    """``pat.sub(repl, ..)`` over the parts of ``text`` outside string
+    literals and comments; quoted identifiers stay rewritable (a jmx
+    bean is a ``"quoted"`` name)."""
+    parts, last = [], 0
+    for m in tokens(text, brackets=""):
+        if m.group()[0] in "'-/":
+            parts += [pat.sub(repl, text[last : m.start()]), m.group()]
+            last = m.end()
+    parts.append(pat.sub(repl, text[last:]))
+    return "".join(parts)
+
+
 class Engine:
     """Session + catalog wrapper.
 
@@ -345,7 +358,6 @@ class Engine:
             re.IGNORECASE,
         )
         jpat = re.compile(r'(?<![\w.])jmx\.(current|history)\."([^"]+)"', re.IGNORECASE)
-        lit = re.compile(r"'(?:[^']|'')*'")
         from prestodb_presto_spark.sources import system_tables as st
 
         def _sys_repl(m):
@@ -361,16 +373,8 @@ class Engine:
             fn(self.spark, bean).createOrReplaceTempView(view)
             return view
 
-        pieces, last = [], 0
-        for lm in lit.finditer(text):
-            pieces.append((text[last : lm.start()], True))
-            pieces.append((lm.group(0), False))
-            last = lm.end()
-        pieces.append((text[last:], True))
-        return "".join(
-            jpat.sub(_jmx_repl, pat.sub(_sys_repl, seg)) if rw else seg
-            for seg, rw in pieces
-        )
+        text = _sub_outside_literals(pat, _sys_repl, text)
+        return _sub_outside_literals(jpat, _jmx_repl, text)
 
     def _session_stmt(self, text: str) -> DataFrame | None:
         """Presto session/metadata statements with no Spark-parser
@@ -848,22 +852,13 @@ class Engine:
                     r"information_schema\.(tables|columns|views|table_privileges)\b",
                     _re.IGNORECASE,
                 )
-                lit = _re.compile(r"'(?:[^']|'')*'")
-                pieces, last, found = [], 0, set()
-                for lm in lit.finditer(text):
-                    pieces.append((text[last : lm.start()], True))
-                    pieces.append((lm.group(0), False))
-                    last = lm.end()
-                pieces.append((text[last:], True))
+                found = set()
 
                 def _repl(m):
                     found.add(m.group(1).lower())
                     return f"__information_schema_{m.group(1).lower()}"
 
-                text = "".join(
-                    pat.sub(_repl, seg) if rewrite else seg
-                    for seg, rewrite in pieces
-                )
+                text = _sub_outside_literals(pat, _repl, text)
                 for view in found:
                     self.information_schema(view).createOrReplaceTempView(
                         f"__information_schema_{view}"
@@ -880,18 +875,8 @@ class Engine:
                 self.spark.sql("SELECT 'test' AS name").createOrReplaceTempView(
                     "__sys_example"
                 )
-                lit2 = _re2.compile(r"'(?:[^']|'')*'")
                 pat2 = _re2.compile(r"(?i)(?<![\w.])sys\.example\b")
-                pieces2, last2 = [], 0
-                for lm in lit2.finditer(text):
-                    pieces2.append((text[last2 : lm.start()], True))
-                    pieces2.append((lm.group(0), False))
-                    last2 = lm.end()
-                pieces2.append((text[last2:], True))
-                text = "".join(
-                    pat2.sub("__sys_example", seg) if rw else seg
-                    for seg, rw in pieces2
-                )
+                text = _sub_outside_literals(pat2, "__sys_example", text)
             text = translate(text)
             with self._presto_literals():
                 # spark.sql parses/analyzes eagerly, so the raw-literal

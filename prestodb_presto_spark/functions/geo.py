@@ -1497,6 +1497,12 @@ def _S_contains(g: str, px: str, py: str) -> str:
     )
 
 
+def _S_either_empty(a: str, b: str) -> str:
+    """An empty geometry has an empty envelope, so Presto's envelope
+    pre-check answers false before any vertex is read."""
+    return f"(size({a}.pts) = 0 OR size({b}.pts) = 0)"
+
+
 def _S_intersects(a: str, b: str) -> str:
     a_pt = f"{a}.kind IN ('point', 'multipoint')"
     b_pt = f"{b}.kind IN ('point', 'multipoint')"
@@ -1511,7 +1517,8 @@ def _S_intersects(a: str, b: str) -> str:
         f" (_q1.x = _q2.x) AND (_q1.y = _q2.y)))"
     )
     return (
-        f"CASE WHEN ({a_pt}) AND ({b_pt}) THEN {pt_hit}"
+        f"CASE WHEN {_S_either_empty(a, b)} THEN false"
+        f" WHEN ({a_pt}) AND ({b_pt}) THEN {pt_hit}"
         f" WHEN {a_pt} THEN exists({a}.pts, _q3 -> {_S_contains(b, '_q3.x', '_q3.y')})"
         f" WHEN {b_pt} THEN exists({b}.pts, _q4 -> {_S_contains(a, '_q4.x', '_q4.y')})"
         f" ELSE ({seg_hit}) OR ({a_in_b}) OR ({b_in_a}) END"
@@ -1554,7 +1561,8 @@ def _S_interiors_intersect(a: str, b: str) -> str:
         f" (_q1.x = _q2.x) AND (_q1.y = _q2.y)))"
     )
     return (
-        f"CASE WHEN {a}.kind IN {kinds} AND {b}.kind IN {kinds}"
+        f"CASE WHEN {_S_either_empty(a, b)} THEN false"
+        f" WHEN {a}.kind IN {kinds} AND {b}.kind IN {kinds}"
         f" AND NOT (({a_pt}) AND ({b_pt})) THEN"
         f" (NOT ({a_pt}) AND NOT ({b_pt}) AND ({_S_proper_cross_any(a, b)}))"
         f" OR (({b_poly}) AND ({vertex_in(a, b)}))"

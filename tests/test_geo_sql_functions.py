@@ -119,3 +119,17 @@ def test_st_relate_rejects_unknown_pattern_characters(spark):
     )
     # lower case is accepted, as before
     assert df.select(P.st_relate("a", "b", "t*t***t**").alias("v")).collect()[0].v
+
+
+def test_intersects_and_touches_are_false_on_an_empty_geometry(spark):
+    """Presto checks envelopes first, and an empty geometry's envelope
+    meets nothing (GeoFunctions.stIntersects / stTouches)."""
+    df = spark.createDataFrame(
+        [("", "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")], "e string, g string"
+    )
+    e, g = P.st_geom_from_text(F.col("e")), P.st_geom_from_text(F.col("g"))
+    row = df.select(
+        P.st_intersects(e, g), P.st_intersects(g, e),
+        P.st_touches(e, g), P.st_touches(g, e), P.st_intersects(e, e),
+    ).first()
+    assert tuple(row) == (False,) * 5
